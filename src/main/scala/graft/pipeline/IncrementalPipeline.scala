@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 import graft.operators.Scale
+import IncrementalPipeline.commitBoth
 
 /** Incremental curation refresh — [[TextPipeline]] composed with the
   * t48 snapshot-versioned dedup index, so batch N+1 costs O(delta),
@@ -123,19 +124,6 @@ class IncrementalPipeline(spark: SparkSession, docsPath: String, outRoot: String
     v
   }
 
-  /** Run two INDEPENDENT-table snapshot commits concurrently (guide
-    * §2.6 overlap: the fp and band indexes are different tables, each
-    * write a small job whose tail otherwise leaves the session idle —
-    * round-20: commit_v0/v1 were ~0.5 s each of back-to-back small
-    * writes). Job-descriptions and commit locks are per-table/thread.
-    */
-  private def commitBoth(a: => Long, b: => Long): Long = {
-    val fb = new java.util.concurrent.FutureTask[Long](() => b)
-    val th = new Thread(fb, "p2-commit-b"); th.setDaemon(true); th.start()
-    val ra = a
-    math.max(ra, fb.get())
-  }
-
   def bandIdxPath: String = s"$outRoot/band_idx"
   def fpIdxPath: String = s"$outRoot/fp_idx"
 
@@ -208,5 +196,31 @@ class IncrementalPipeline(spark: SparkSession, docsPath: String, outRoot: String
     drainObservations()
     TextPipeline.lastRunDurations = durations.toMap
     dc
+  }
+}
+
+object IncrementalPipeline {
+
+  /** Run two INDEPENDENT-table snapshot commits concurrently (guide
+    * §2.6 overlap: the fp and band indexes are different tables, each
+    * write a small job whose tail otherwise leaves the session idle —
+    * round-20: commit_v0/v1 were ~0.5 s each of back-to-back small
+    * writes). Job-descriptions and commit locks are per-table/thread.
+    * Always waits for `b`, also when `a` throws, so no commit is still
+    * running when the caller sees the failure; when both fail, `b`'s
+    * error rides `a`'s as suppressed.
+    */
+  private[graft] def commitBoth(a: => Long, b: => Long): Long = {
+    val fb = new java.util.concurrent.FutureTask[Long](() => b)
+    val th = new Thread(fb, "p2-commit-b"); th.setDaemon(true); th.start()
+    val ra = try Right(a) catch { case e: Throwable => Left(e) }
+    val rb = try Right(fb.get()) catch {
+      case e: java.util.concurrent.ExecutionException => Left(e.getCause)
+    }
+    (ra, rb) match {
+      case (Right(x), Right(y)) => math.max(x, y)
+      case (Left(ea), _) => rb.left.foreach(ea.addSuppressed); throw ea
+      case (_, Left(eb)) => throw eb
+    }
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.{Relational, Scale}
 import graft.silver.Transforms
+import graft.streaming.StreamExec
+import graft.streaming.StreamExec.{Callback, Sliced}
 import Q.{cents, sqlCents, asLong, sqlLong}
 
 /** General relational query surface over the testdata star schema —
@@ -617,11 +619,11 @@ object RelationalQueries {
           graft.streaming.StreamExec.scratchParent, "cdc_tbl_").toString + "/t"
         // the version keys are synthesized constants 1..3 — static
         // bounds skip the harness's min/max scan of the change log
-        graft.streaming.StreamExec.replayForeachBatch(log, "version", 3,
-          bounds = Some((1L, 3L))) { b =>
-          graft.operators.Scale.mergeParquet(s, table, b, Seq("o_orderkey"),
-            Seq(col("version").desc), deleteCol = Some("deleted"))
-        }
+        StreamExec.replay(Seq(Sliced(log, "version", 3, bounds = Some((1L, 3L)))),
+          Callback { (b, _) =>
+            graft.operators.Scale.mergeParquet(s, table, b, Seq("o_orderkey"),
+              Seq(col("version").desc), deleteCol = Some("deleted"))
+          })()
         s.read.parquet(table).orderBy("o_orderkey")
       },
       Some(s"""
@@ -672,22 +674,21 @@ object RelationalQueries {
           graft.streaming.StreamExec.scratchParent, "s21_tbl_").toString + "/t"
         // the slice key is o_orderkey % 5 — static bounds skip the
         // harness's min/max scan
-        graft.streaming.StreamExec.replayForeachBatchRestart(
-          rows, "slice", slices = 5, splitAt = 3,
-          bounds = Some((0L, 4L))) { (b, id) =>
-          def accumulated = {
-            val prev =
-              if (graft.operators.Scale.latestSnapshot(s, table).isEmpty) b.limit(0)
-              else graft.operators.Scale.readSnapshot(s, table)
-            prev.unionByName(b)
-          }
-          val first = graft.operators.Scale.writeSnapshotIdempotent(
-            s, table, accumulated, s"b$id")
-          require(first.nonEmpty, s"s21: batch $id first apply must commit")
-          val second = graft.operators.Scale.writeSnapshotIdempotent(
-            s, table, accumulated, s"b$id")
-          require(second.isEmpty, s"s21: redelivered batch $id must no-op")
-        }
+        StreamExec.replay(Seq(Sliced(rows, "slice", 5, bounds = Some((0L, 4L)))),
+          Callback { (b, id) =>
+            def accumulated = {
+              val prev =
+                if (graft.operators.Scale.latestSnapshot(s, table).isEmpty) b.limit(0)
+                else graft.operators.Scale.readSnapshot(s, table)
+              prev.unionByName(b)
+            }
+            val first = graft.operators.Scale.writeSnapshotIdempotent(
+              s, table, accumulated, s"b$id")
+            require(first.nonEmpty, s"s21: batch $id first apply must commit")
+            val second = graft.operators.Scale.writeSnapshotIdempotent(
+              s, table, accumulated, s"b$id")
+            require(second.isEmpty, s"s21: redelivered batch $id must no-op")
+          }, splitAt = Some(3))()
         val versions = graft.operators.Scale.latestSnapshot(s, table)
           .map(_ + 1).getOrElse(0L)
         graft.operators.Scale.readSnapshot(s, table)

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 import graft.operators.Relational
+import graft.streaming.StreamExec
+import graft.streaming.StreamExec.{Arrivals, Callback, Sliced, Update}
 
 /** Training-data text operators over the `documents` table: exact dedup,
   * MinHash+LSH candidate pairs, SimHash, n-gram Jaccard, language ID,
@@ -796,9 +798,8 @@ object TextQueries {
           lit(-1L).as("event_id"), lit(hi + latenessUs + 2 * gapUs).as("ts_us"),
           lit(-1L).as("user_id"), lit("__wm").as("event_type"),
           lit(0.0).as("value"))
-        graft.streaming.StreamExec.replayFileStream(ev, "ts_us", sentinel, 2,
-          bounds = Some((lo, hi))) {
-          st => graft.streaming.EventStreams.sessionizeNative(
+        StreamExec.replay(Seq(Sliced(ev, "ts_us", 2, Some(sentinel), Some((lo, hi))))) {
+          case Seq(st) => graft.streaming.EventStreams.sessionizeNative(
             st, gapUs, lateness = s"$latenessUs microseconds")
         }.filter(col("user_id") >= 0)
           .orderBy("user_id", "session_start_us")
@@ -843,9 +844,8 @@ object TextQueries {
           lit(-1L).as("event_id"), lit(hi + latenessUs + 2 * hourUs).as("ts_us"),
           lit(-1L).as("user_id"), lit("__wm").as("event_type"),
           lit(0.0).as("value"))
-        graft.streaming.StreamExec.replayFileStream(ev, "ts_us", sentinel, 2,
-          bounds = Some((lo, hi))) {
-          st => graft.streaming.EventStreams.windowedCounts(
+        StreamExec.replay(Seq(Sliced(ev, "ts_us", 2, Some(sentinel), Some((lo, hi))))) {
+          case Seq(st) => graft.streaming.EventStreams.windowedCounts(
             st, "1 hour", s"$latenessUs microseconds")
         }.filter(col("event_type") =!= "__wm")
           .orderBy("bucket", "event_type")
@@ -879,9 +879,8 @@ object TextQueries {
           lit(-1L).as("event_id"), lit(hi + latenessUs + 2 * hourUs).as("ts_us"),
           lit(-1L).as("user_id"), lit("__wm").as("event_type"),
           lit(0.0).as("value"))
-        graft.streaming.StreamExec.replayFileStream(ev, "ts_us", sentinel, 2,
-          bounds = Some((lo, hi))) {
-          st => graft.streaming.EventStreams.slidingCounts(
+        StreamExec.replay(Seq(Sliced(ev, "ts_us", 2, Some(sentinel), Some((lo, hi))))) {
+          case Seq(st) => graft.streaming.EventStreams.slidingCounts(
             st, "1 hour", "30 minutes", s"$latenessUs microseconds")
         }.filter(col("event_type") =!= "__wm")
           .orderBy("bucket", "event_type")
@@ -930,7 +929,7 @@ object TextQueries {
           lit(-3L).as("user_id"), lit("__adv").as("event_type"),
           lit(0.0).as("value"))
         val c = ev.withColumn("ts_us", lit(hi + 5 * hourUs))
-        graft.streaming.StreamExec.replayFileSequence(Seq(a, b, b2, c)) { st =>
+        StreamExec.replay(Seq(Arrivals(Seq(a, b, b2, c)))) { case Seq(st) =>
           st.withColumn("ts_ts", timestamp_micros(col("ts_us")))
             .withWatermark("ts_ts", "1 hour")
             .dropDuplicatesWithinWatermark("event_id")
@@ -974,8 +973,8 @@ object TextQueries {
         val ev = Tables.events(s, d).select(
           col("event_id"), col("ts_us"), col("user_id"),
           col("event_type"), col("value"))
-        val upd = graft.streaming.StreamExec.replayUpdateMode(ev, "ts_us", 4) {
-          st => st.withColumn("ts_ts", timestamp_micros(col("ts_us")))
+        val upd = StreamExec.replay(Seq(Sliced(ev, "ts_us", 4)), Update) {
+          case Seq(st) => st.withColumn("ts_ts", timestamp_micros(col("ts_us")))
             .groupBy(window(col("ts_ts"), "1 hour").as("w"), col("event_type"))
             .agg(count(lit(1)).as("cnt"))
             .select(unix_timestamp(col("w.start")).as("bucket"),
@@ -1035,9 +1034,8 @@ object TextQueries {
           lit(0.0).as("value"))
         implicit val enc: org.apache.spark.sql.Encoder[graft.streaming.EventStreams.Event] =
           org.apache.spark.sql.Encoders.product[graft.streaming.EventStreams.Event]
-        graft.streaming.StreamExec.replayFileStream(ev, "ts_us", sentinel, 2,
-          bounds = Some((lo, hi))) {
-          st => graft.streaming.EventStreams.sessionize(st.as[graft.streaming.EventStreams.Event], gapUs).toDF()
+        StreamExec.replay(Seq(Sliced(ev, "ts_us", 2, Some(sentinel), Some((lo, hi))))) {
+          case Seq(st) => graft.streaming.EventStreams.sessionize(st.as[graft.streaming.EventStreams.Event], gapUs).toDF()
         }.filter(col("user_id") >= 0)
           .select(col("user_id"), col("session_start_us"),
             col("session_end_us"), col("n_events"))
@@ -1088,11 +1086,10 @@ object TextQueries {
           lit(-1L).as("event_id"), lit(hi + 3 * gapUs + 1000000L).as("ts_us"),
           lit(-1L).as("user_id"), lit("__wm").as("event_type"),
           lit(0.0).as("value"))
-        graft.streaming.StreamExec.replayFileStream(ev, "ts_us", sentinel, 2,
-          bounds = Some((lo, hi)),
+        StreamExec.replay(Seq(Sliced(ev, "ts_us", 2, Some(sentinel), Some((lo, hi)))),
           sessionConfs = Map("spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
-          st => graft.streaming.EventStreams.sessionizeTws(
+          case Seq(st) => graft.streaming.EventStreams.sessionizeTws(
             st.as[graft.streaming.EventStreams.Event](
               org.apache.spark.sql.Encoders.product[graft.streaming.EventStreams.Event]),
             gapUs).toDF()
@@ -1434,10 +1431,10 @@ object TextQueries {
           lit(-1L).as("event_id"), lit(hi + latenessUs + 2 * hourUs).as("ts_us"),
           lit(-1L).as("user_id"), lit("__wm").as("event_type"),
           lit(0.0).as("value"))
-        graft.streaming.StreamExec.replayFileStream2(
-          ev.filter(col("event_type") === "view"),
-          ev.filter(col("event_type") === "click"),
-          "ts_us", sentinel, sentinel, 2) { (imps, convs) =>
+        StreamExec.replay(Seq(
+          Sliced(ev.filter(col("event_type") === "view"), "ts_us", 2, Some(sentinel)),
+          Sliced(ev.filter(col("event_type") === "click"), "ts_us", 2, Some(sentinel)))) {
+          case Seq(imps, convs) =>
             graft.streaming.EventStreams.attributionJoin(
               imps, convs, windowSec = 3600,
               lateness = s"$latenessUs microseconds")
@@ -1481,8 +1478,8 @@ object TextQueries {
         val (lo, hi) = (mm.getLong(0), mm.getLong(1))
         val sentinel = s.range(1).select(
           lit(hi + 1000000L).as("doc_id"), lit("__wm").as("text"))
-        graft.streaming.StreamExec.replayFileStream(
-          docs, "doc_id", sentinel, 2, bounds = Some((lo, hi))) { st =>
+        StreamExec.replay(
+          Seq(Sliced(docs, "doc_id", 2, Some(sentinel), Some((lo, hi))))) { case Seq(st) =>
             st.select(TextOps.fingerprint(col("text")).as("fp"))
               .dropDuplicates("fp")
         }.filter(col("fp") =!= md5(lit("__wm")))
@@ -1517,8 +1514,7 @@ object TextQueries {
           lit(-1L).as("event_id"), lit(hi + latenessUs + 2 * hourUs).as("ts_us"),
           lit(-1L).as("user_id"), lit("__wm").as("event_type"),
           lit(0.0).as("value"))
-        graft.streaming.StreamExec.replayFileStream(ev, "ts_us", sentinel, 2,
-          bounds = Some((lo, hi))) { st =>
+        StreamExec.replay(Seq(Sliced(ev, "ts_us", 2, Some(sentinel), Some((lo, hi))))) { case Seq(st) =>
           val keyed = st
             .withColumn("n_key", (col("user_id") % 25).cast("int"))
             .withColumn("ts_ts", timestamp_micros(col("ts_us")))
@@ -1569,7 +1565,7 @@ object TextQueries {
           graft.streaming.StreamExec.scratchParent, "dqgate_")
         val (cleanDir, quarDir, auditDir) = (base.resolve("clean").toString,
           base.resolve("quar").toString, base.resolve("audit").toString)
-        graft.streaming.StreamExec.replayForeachBatch(docs, "doc_id", 2) { b =>
+        StreamExec.replay(Seq(Sliced(docs, "doc_id", 2)), Callback { (b, _) =>
           val (clean, bad) = graft.quality.DataQuality.quarantine(b, ruleset)
           clean.write.mode("append").parquet(cleanDir)
           bad.write.mode("append").parquet(quarDir)
@@ -1577,7 +1573,7 @@ object TextQueries {
             .results.map(r => (r.rule, r.passed, r.observed))
             .toDF("rule", "passed", "observed")
             .write.mode("append").parquet(auditDir)
-        }
+        })()
         val audit = s.read.parquet(auditDir)
           .groupBy("rule")
           .agg(sum(col("observed")).as("value"),
@@ -1623,7 +1619,7 @@ object TextQueries {
     // s15: LATE-DATA DISCARD under real execution — the watermark
     // semantic none of s7–s14 could exercise, because the time-sliced
     // replay harness never delivers a late row by construction. Here
-    // the ARRIVAL order is explicit (StreamExec.replayFileSequence):
+    // the ARRIVAL order is explicit (StreamExec.Arrivals):
     // the odd-event_id half of the first time-quarter is withheld and
     // re-delivered only AFTER two newer batches have advanced the
     // watermark (1 h lateness; the quarters are ~180 h wide, so the
@@ -1663,7 +1659,7 @@ object TextQueries {
           ev.filter(col("ts_us") >= lo + 3 * q),
           ev.filter(isEarly && isOdd), // late: behind the watermark now
           sentinel)
-        graft.streaming.StreamExec.replayFileSequence(batches) { st =>
+        StreamExec.replay(Seq(Arrivals(batches))) { case Seq(st) =>
           st.withColumn("ts_ts", timestamp_micros(col("ts_us")))
             .withWatermark("ts_ts", "1 hour")
             .groupBy(window(col("ts_ts"), "1 hour").as("w"), col("event_type"))
@@ -1713,10 +1709,10 @@ object TextQueries {
           lit(-1L).as("event_id"), lit(hi + latenessUs + 2 * hourUs).as("ts_us"),
           lit(-1L).as("user_id"), lit("__wm").as("event_type"),
           lit(0.0).as("value"))
-        graft.streaming.StreamExec.replayFileStream2(
-          ev.filter(col("event_type") === "view"),
-          ev.filter(col("event_type") === "click"),
-          "ts_us", sentinel, sentinel, 2) { (imps, convs) =>
+        StreamExec.replay(Seq(
+          Sliced(ev.filter(col("event_type") === "view"), "ts_us", 2, Some(sentinel)),
+          Sliced(ev.filter(col("event_type") === "click"), "ts_us", 2, Some(sentinel)))) {
+          case Seq(imps, convs) =>
             graft.streaming.EventStreams.attributionJoin(
               imps, convs, windowSec = 3600,
               lateness = s"$latenessUs microseconds", joinType = "leftOuter")
@@ -1743,7 +1739,7 @@ object TextQueries {
     // micro-batch boundaries within ONE query lifetime; s17 proves it
     // survives the lifetime boundary itself: the replay runs two
     // sequential StreamingQuery instances against one checkpoint
-    // (StreamExec.replayFileStreamRestart) — query #1 processes the
+    // (StreamExec.replay with splitAt) — query #1 processes the
     // first slice and stops, query #2 must RESUME from the
     // recorded offsets (batch ids continue — asserted) and restore the
     // state store before processing the rest. Hour windows cut by the
@@ -1768,10 +1764,9 @@ object TextQueries {
           lit(-1L).as("event_id"), lit(hi + latenessUs + 2 * hourUs).as("ts_us"),
           lit(-1L).as("user_id"), lit("__wm").as("event_type"),
           lit(0.0).as("value"))
-        graft.streaming.StreamExec.replayFileStreamRestart(
-          ev, "ts_us", sentinel, slices = 2, splitAt = 1,
-          bounds = Some((lo, hi))) {
-          st => graft.streaming.EventStreams.windowedCounts(
+        StreamExec.replay(Seq(Sliced(ev, "ts_us", 2, Some(sentinel), Some((lo, hi)))),
+          splitAt = Some(1)) {
+          case Seq(st) => graft.streaming.EventStreams.windowedCounts(
             st, "1 hour", s"$latenessUs microseconds")
         }.filter(col("event_type") =!= "__wm")
           .orderBy("bucket", "event_type")

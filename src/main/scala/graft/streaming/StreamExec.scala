@@ -1,35 +1,35 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Real incremental streaming EXECUTION harness: replay a bounded frame
-  * as a time-sliced file stream through an actual `StreamingQuery`
-  * (file source → transform → parquet sink, `Trigger.AvailableNow`),
-  * and return what the SINK contains. The s1–s6 gate entries pin
-  * streaming *shapes* by running the shared transforms on batch input;
-  * the s7/s8 entries run the SAME transforms through this harness, so
-  * micro-batch state carry-over, watermark-driven append emission, and
-  * checkpoint/sink plumbing are themselves under the DuckDB oracle.
+/** Real incremental streaming EXECUTION harness: replay bounded frames
+  * as file streams through an actual `StreamingQuery` (file source →
+  * transform → sink, `Trigger.AvailableNow`) with [[StreamExec.replay]].
+  * The s1–s6 gate entries pin streaming *shapes* by running the shared
+  * transforms on batch input; the s7+ entries run the SAME transforms
+  * through this harness, so micro-batch state carry-over,
+  * watermark-driven append emission, and checkpoint/sink plumbing are
+  * themselves under the DuckDB oracle.
   *
   * Mechanics:
-  *   - The input is split into `slices` contiguous event-time ranges,
-  *     each written as ONE parquet file with strictly ascending
-  *     modification times; `maxFilesPerTrigger=1` then forces one
-  *     micro-batch per slice (Spark's file source processes oldest
-  *     mtime first), so entities spanning slice boundaries — a session
-  *     straddling two files, an hour window fed by three — exercise
-  *     cross-batch state merge for real.
+  *   - Each source is split into slices — contiguous order-key ranges
+  *     ([[StreamExec.Sliced]]) or explicit batches in arrival order
+  *     ([[StreamExec.Arrivals]]) — each written as ONE parquet file with
+  *     strictly ascending modification times; `maxFilesPerTrigger=1`
+  *     then forces one micro-batch per slice (Spark's file source
+  *     processes oldest mtime first), so entities spanning slice
+  *     boundaries — a session straddling two files, an hour window fed
+  *     by three — exercise cross-batch state merge for real.
   *   - Append-mode aggregation only emits state the watermark has
   *     passed. The caller's `lateness` must cover the whole replayed
   *     span (no replayed event is ever late — arrival order inside a
   *     slice is nondeterministic), and a single WATERMARK SENTINEL row
   *     — far-future timestamp, impossible key — RIDES THE LAST SLICE
-  *     file (round-20; it was previously its own file and therefore its
-  *     own micro-batch): the watermark is recomputed from the max event
-  *     time at the END of each batch, so the final data batch advances
-  *     it past every real session/window end and the trailing no-data
+  *     file: the watermark is recomputed from the max event time at the
+  *     END of each batch, so the final data batch advances it past
+  *     every real session/window end and the trailing no-data
   *     micro-batch (`spark.sql.streaming.noDataMicroBatches.enabled`,
   *     default on) flushes the state store to the sink. The sentinel's
   *     own state never emits (nothing passes ITS end) and its key is
@@ -54,10 +54,6 @@ object StreamExec {
     */
   @volatile private var streamRanSinceTeardown = false
 
-  /** Debug/inspection hook: the last completed replay's per-batch
-    * progress JSON (set by [[replayFileStream]]). */
-  @volatile private[graft] var lastProgress: Seq[String] = Seq.empty
-
   /** Stop the state-store maintenance thread and unload every cached
     * provider. No-op unless a streaming query actually ran since the
     * last call, so callers (Bench, after every query) pay nothing on
@@ -68,20 +64,6 @@ object StreamExec {
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     streamRanSinceTeardown = false
   }
-
-  /** Phase timer for the replay harness, enabled by
-    * SPARK_GRAFT_STREAM_DEBUG=1 (stderr only — the optimization round's
-    * stand-in for the streaming tab of the disabled UI).
-    */
-  private val streamDebug = sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")
-  private[streaming] def phase[T](label: String)(body: => T): T =
-    if (!streamDebug) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally System.err.println(
-        f"[stream-phase] $label%-22s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
 
   /** One shared reaped scratch parent for every replay (source files,
     * checkpoint, sink), mirroring PipelineQueries.checkpointParent:
@@ -103,65 +85,247 @@ object StreamExec {
     root
   }
 
-  /** Split `input` into `slices` event-time-range files plus the
-    * `sentinel` file, stream them through `transform`, await
-    * completion, and return the parquet sink's contents. Requires the
-    * query to have actually run incrementally: at least `slices`
-    * micro-batches carried input rows (a single-batch fallback would
-    * silently stop exercising cross-batch state).
+  /** State partition count of the append and update sinks. It is FROZEN
+    * INTO THE CHECKPOINT at query start (spark.sql.shuffle.partitions),
+    * so it is sized to the replayed state volume, not inherited from the
+    * session's batch tuning: every micro-batch commits one store delta
+    * per partition, and 32 near-empty partitions × (slices + no-data
+    * batches) is pure fixed overhead — measured ~2 s per replay at gate
+    * scale. Results are partitioning-independent either way (the
+    * determinism gate pins this). Callback sinks keep the session's
+    * value, so the tables their statements write keep its partitioning.
     */
-  /** Materialize `input` as `slices` time-range parquet FILES plus the
-    * sentinel under `src`: each slice is one file (write to scratch,
-    * move the part file in) with strictly ascending mtimes — the file
-    * source's oldest-first order is the replay order, and the sentinel
-    * must be processed last or every real event goes late.
+  private val StatePartitions = 4
+
+  /** One replayed input: one parquet file, hence one micro-batch, per
+    * slice. */
+  sealed trait Source {
+    def frame: DataFrame
+    def slices: Int
+  }
+
+  /** `frame` cut into `slices` contiguous ranges of the integral (or
+    * timestamp) `orderCol`: slice = (v - lo) div span, with span =
+    * (hi - lo) / slices + 1. `bounds` is the caller's (min, max) of
+    * `orderCol` when it already computed them (for the sentinel or the
+    * lateness): the internal min/max scan is a full extra pass of the
+    * replayed input. `sentinel` (the watermark flush of append-mode
+    * aggregations) rides the last slice.
     */
-  /** Replay EXPLICIT batches in the given ARRIVAL order (one micro-batch
-    * each, oldest-mtime-first), run `transform`, and return the parquet
-    * sink. Unlike [[replayFileStream]], the batches need not be
-    * event-time slices — this is the surface for exercising LATE
-    * arrivals: a batch whose event times lie behind the watermark the
-    * earlier batches advanced. The caller appends its own
-    * watermark-flush sentinel batch when the transform aggregates.
+  final case class Sliced(frame: DataFrame, orderCol: String, slices: Int,
+                          sentinel: Option[DataFrame] = None,
+                          bounds: Option[(Long, Long)] = None) extends Source
+
+  /** Explicit batches in ARRIVAL order, one micro-batch each. They need
+    * not be event-time slices — this is the surface for LATE arrivals:
+    * a batch whose event times lie behind the watermark the earlier
+    * batches advanced. The caller appends its own watermark-flush
+    * sentinel batch when the transform aggregates.
     */
-  def replayFileSequence(batches: Seq[DataFrame], statePartitions: Int = 4)
-                        (transform: DataFrame => DataFrame): DataFrame = {
-    val spark = batches.head.sparkSession
-    require(batches.size >= 2, s"replayFileSequence: need >= 2 batches, got ${batches.size}")
-    val root = java.nio.file.Files.createTempDirectory(scratchParent, "replayseq_")
-    val src = root.resolve("src")
-    // all batches share one schema (one file-source reads them), so the
-    // arrival sequence writes in a single partitioned pass
-    val all = batches.zipWithIndex
-      .map { case (b, i) => b.withColumn("__slice", lit(i.toLong)) }
-      .reduce(_ unionByName _)
-    writeSliceFiles(all, root, src,
-      i => if (i < batches.size) Some(f"file$i%04d") else None)
+  final case class Arrivals(batches: Seq[DataFrame]) extends Source {
+    def frame: DataFrame = batches.head
+    def slices: Int = batches.size
+  }
+
+  sealed trait Sink
+
+  /** Append output mode into a parquet sink; [[replay]] returns the sink. */
+  case object Append extends Sink
+
+  /** UPDATE output mode — the dashboard-refresh semantics append mode
+    * can't show: a key re-emits in EVERY batch where its aggregate
+    * changed. No watermark or sentinel is needed for a bounded replay.
+    * [[replay]] returns the raw captured emissions (transform columns +
+    * `__batch`, the batch id); callers reduce last-writer-wins
+    * themselves so the per-batch emission trail stays checkable.
+    */
+  case object Update extends Sink
+
+  /** `foreachBatch` sink for STATEMENTS rather than appends (CDC upsert
+    * into a keyed table, warehouse MERGE): `f(batch, batchId)` runs for
+    * each non-empty micro-batch, strictly in batch order, batch N+1 not
+    * starting until N's callback returns — exactly the ordering a merge
+    * sequence needs. The real batch ids let a sink implement
+    * batchId-keyed idempotence. [[replay]] returns an empty frame.
+    */
+  final case class Callback(f: (DataFrame, Long) => Unit) extends Sink
+
+  /** Replay `sources` through `transform` (one stream per source, in
+    * order) into `sink`, await completion, and return what the sink
+    * holds. Requires the query to have actually run incrementally: at
+    * least one data micro-batch per slice (a single-batch fallback would
+    * silently stop exercising cross-batch state). Two sources become
+    * independent file streams advancing together through event time,
+    * one file from each per micro-batch — the stream-STREAM join
+    * surface, where a row waiting N batches for its match is join state.
+    *
+    * `splitAt` = k makes it the CHECKPOINT-RESTART replay, the
+    * state-RECOVERY surface: only slices 0..k-1 exist while query #1
+    * runs to completion and STOPS, leaving its state and watermark only
+    * in the checkpoint; then the remaining slices (with the sentinel)
+    * land and query #2 starts AGAINST THE SAME CHECKPOINT and sink. It
+    * must resume from the recorded offsets — asserted: its batch ids
+    * strictly follow query #1's, so a batchId-keyed sink sees each id
+    * exactly once — and restore the state store, or windows straddling
+    * the cut emit as duplicate partials and the oracle compare fails.
+    * This is the production rollout/crash path: correctness rests on
+    * the checkpoint contract, not on any single query lifetime.
+    *
+    * `sessionConfs` is set only while the query starts (e.g. the RocksDB
+    * state-store provider transformWithState needs).
+    */
+  def replay(sources: Seq[Source], sink: Sink = Append, splitAt: Option[Int] = None,
+             sessionConfs: Map[String, String] = Map.empty)
+            (transform: Seq[DataFrame] => DataFrame = _.head): DataFrame = {
+    val spark = sources.head.frame.sparkSession
+    val slices = sources.map(_.slices).max
+    require(sources.forall(_.slices >= 2), "replay: need >= 2 slices per source " +
+      s"to exercise cross-batch state, got ${sources.map(_.slices).mkString(", ")}")
+    splitAt.foreach(k => require(k >= 1 && k < slices,
+      s"replay: splitAt must cut the replay in two, got $k/$slices"))
+    val root = java.nio.file.Files.createTempDirectory(scratchParent, "replay_")
+    val srcs = sources.indices.map(i => root.resolve(
+      if (sources.size == 1) "src" else s"src${('A' + i).toChar}"))
+    val stamped = sources.map(stampSlices)
     val out = root.resolve("out").toString
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.get(shuffleKey)
-    val q = try {
-      spark.conf.set(shuffleKey, statePartitions.toString)
-      spark.readStream
-        .schema(batches.head.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-        .transform(transform)
-        .writeStream
-        .format("parquet")
-        .option("path", out)
+    val confs = sink match {
+      case _: Callback => sessionConfs
+      case _ => Map("spark.sql.shuffle.partitions" -> StatePartitions.toString) ++ sessionConfs
+    }
+    def start(): StreamingQuery = {
+      val streams = sources.zip(srcs).map { case (s, p) =>
+        spark.readStream.schema(s.frame.schema)
+          .option("maxFilesPerTrigger", 1).parquet(p.toString)
+      }
+      val w = transform(streams).writeStream
         .option("checkpointLocation", root.resolve("ck").toString)
-        .outputMode("append")
         .trigger(Trigger.AvailableNow())
-        .start()
-    } finally spark.conf.set(shuffleKey, savedShuffle)
+      (sink match {
+        case Append => w.format("parquet").option("path", out).outputMode("append")
+        case Update => w.outputMode("update").foreachBatch { (df: Dataset[Row], id: Long) =>
+          df.withColumn("__batch", lit(id)).write.mode("append").parquet(out)
+        }
+        case Callback(f) => w.foreachBatch { (df: Dataset[Row], id: Long) =>
+          if (!df.isEmpty) f(df.toDF(), id)
+        }
+      }).start()
+    }
+    // one slice-file write and one query lifetime per run; the sentinel
+    // sits in the last slice, so it rides the last run
+    val runs = splitAt.fold(Seq((Option.empty[Column], slices))) { k =>
+      Seq((Some(col("__slice") < k), k), (Some(col("__slice") >= k), slices - k))
+    }
+    runs.zipWithIndex.foldLeft(-1L) { case (lastBatch, ((cut, minData), run)) =>
+      stamped.zip(srcs).foreach { case ((df, prefix, geometry), src) =>
+        writeSliceFiles(cut.fold(df)(df.filter), root, src, geometry,
+          i => if (i < slices) Some(f"$prefix$i%04d") else None)
+      }
+      runQuery(spark, confs, s"replay run ${run + 1}/${runs.size}", minData, lastBatch)(start())
+    }
+    sink match {
+      case _: Callback => spark.emptyDataFrame
+      case _ => spark.read.parquet(out)
+    }
+  }
+
+  /** One query lifetime: start it with `confs` set (restored once it has
+    * started — the running query keeps its own copy), await it, and
+    * require at least `minData` micro-batches that carried rows and, for
+    * a resumed query, batch ids strictly after the previous lifetime's
+    * `resumeAfter`. Returns the last batch id (-1 when none ran).
+    */
+  private def runQuery(spark: SparkSession, confs: Map[String, String], label: String,
+                       minData: Int = 0, resumeAfter: Long = -1L)
+                      (start: => StreamingQuery): Long = {
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k))
+    val q = try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      start
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
     q.awaitTermination()
     streamRanSinceTeardown = true
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= batches.size,
-      s"replayFileSequence: expected >= ${batches.size} data micro-batches, saw " +
-        s"$dataBatches - the run was not incremental")
-    spark.read.parquet(out)
+    val progress = q.recentProgress
+    val data = progress.count(_.numInputRows > 0)
+    require(data >= minData, s"$label: expected >= $minData data micro-batches, " +
+      s"saw $data - the run was not incremental")
+    val ids = progress.map(_.batchId)
+    require(ids.forall(_ > resumeAfter), s"$label: did not resume from the " +
+      s"checkpoint (first batch ${ids.min} vs previous run's last $resumeAfter)")
+    ids.foldLeft(-1L)(math.max)
+  }
+
+  /** Stamp a source's rows with their `__slice` index: the order-key
+    * geometry for [[Sliced]] (sentinel in the last slice), the arrival
+    * index for [[Arrivals]]. Returns the stamped frame, the file-name
+    * prefix, and the geometry for error messages.
+    */
+  private def stampSlices(s: Source): (DataFrame, String, String) = s match {
+    case Arrivals(batches) =>
+      // all batches share one schema (one file source reads them), so
+      // the arrival sequence writes in a single partitioned pass
+      (batches.zipWithIndex.map { case (b, i) => b.withColumn("__slice", lit(i.toLong)) }
+        .reduce(_ unionByName _), "file", s"${batches.size} arrival batches")
+    case Sliced(frame, orderCol, slices, sentinel, bounds) =>
+      val (lo, hi) = bounds.getOrElse {
+        val mm = frame.agg(min(col(orderCol)).cast("long"), max(col(orderCol)).cast("long")).head()
+        require(!mm.isNullAt(0), "replay: empty input")
+        (mm.getLong(0), mm.getLong(1))
+      }
+      val span = math.max(1L, (hi - lo) / slices + 1)
+      val sliced = frame.withColumn("__slice",
+        expr(s"(cast(`$orderCol` as bigint) - ${lo}L) div ${span}L"))
+      (sentinel.fold(sliced)(st =>
+        sliced.unionByName(st.withColumn("__slice", lit((slices - 1).toLong)))),
+        "slice", s"bounds ($lo, $hi) of `$orderCol`, $slices slices of span $span")
+  }
+
+  /** Write a `__slice`-stamped frame as one ascending-mtime file per
+    * slice under `src` via a single hive-partitioned job (one pass, not
+    * one filter+write job per slice). `nameOf` maps a slice index to its
+    * file name (None = unexpected index, fails). Empty slices produce no
+    * file, contribute no data micro-batch and so fail the incrementality
+    * require. A negative or non-numeric slice (bounds that do not cover
+    * the input) fails loudly, naming the `geometry`; NULL order keys land
+    * in __HIVE_DEFAULT_PARTITION__ and are dropped, as a per-slice
+    * `=== i` filter would.
+    */
+  private def writeSliceFiles(all: DataFrame, root: java.nio.file.Path,
+                              src: java.nio.file.Path, geometry: String,
+                              nameOf: Int => Option[String]): Unit = {
+    java.nio.file.Files.createDirectories(src)
+    val tmp = root.resolve(s"__${src.getFileName}_all").toString
+    // hash-repartition BY SLICE, not coalesce(1): each slice still lands
+    // wholly in one task (one part file per slice dir — the invariant
+    // the mtime-pinned rename below needs), but distinct slices write in
+    // parallel instead of serializing the whole replay input through a
+    // single task
+    all.repartition(all.sparkSession.sparkContext.defaultParallelism, col("__slice"))
+      .write.mode("overwrite").partitionBy("__slice").parquet(tmp)
+    val baseMtime = (System.currentTimeMillis() / 1000) * 1000 - 3600L * 1000
+    Option(new java.io.File(tmp).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("__slice=") &&
+        f.getName != "__slice=__HIVE_DEFAULT_PARTITION__")
+      .map { dir =>
+        val i = dir.getName.stripPrefix("__slice=").toIntOption.filter(_ >= 0).getOrElse(
+          sys.error(s"replay: slice dir ${dir.getName} is outside the replay - the " +
+            s"$geometry do not cover the input"))
+        (i, dir)
+      }
+      .sortBy(_._1)
+      .foreach { case (i, dir) =>
+        val name = nameOf(i).getOrElse(
+          sys.error(s"replay: unexpected slice index $i in ${dir.getPath} ($geometry)"))
+        val part = Option(dir.listFiles()).getOrElse(Array.empty)
+          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+          .getOrElse(sys.error(s"no part file written for slice $i"))
+        val dst = src.resolve(s"$name.parquet").toFile
+        require(part.renameTo(dst), s"rename failed: $part -> $dst")
+        require(dst.setLastModified(baseMtime + i * 60000L),
+          s"cannot pin mtime for $dst")
+      }
   }
 
   /** STREAMING CHANGE-DATA-FEED SOURCE — one micro-batch drain of a
@@ -296,7 +460,7 @@ object StreamExec {
     // recursiveFileLookup disables hive-partition inference, so a DATA
     // column named `v` can never collide with the feed's `v=<n>` dir
     // layout; the commit version is derived from the file path instead
-    val q = spark.readStream
+    runQuery(spark, Map.empty, "cdfStreamOnce")(spark.readStream
       .schema(physSchema)
       .option("recursiveFileLookup", "true")
       .parquet(srcGlob)
@@ -310,460 +474,6 @@ object StreamExec {
       .foreachBatch { (b: DataFrame, id: Long) => foreach(b, id) }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    streamRanSinceTeardown = true
-  }
-
-  private def writeSlices(input: DataFrame, tsCol: String,
-                          sentinelOpt: Option[DataFrame],
-                          slices: Int, root: java.nio.file.Path,
-                          src: java.nio.file.Path,
-                          bounds: Option[(Long, Long)] = None): Unit = {
-    // `bounds`: callers that already ran a min/max over THIS frame (for
-    // the sentinel timestamp / lateness) pass it down — the internal
-    // min/max scan was a measured chunk of the per-replay floor
-    // (round-20: ~0.2 s per replay at gate scale, a full extra pass of
-    // the replayed input at any scale).
-    val (lo, hi) = bounds.getOrElse {
-      val mm = phase("  slices:minmax")(
-        input.agg(min(col(tsCol)).cast("long").as("lo"),
-          max(col(tsCol)).cast("long").as("hi")).head())
-      require(!mm.isNullAt(0), "replayFileStream: empty input")
-      (mm.getLong(0), mm.getLong(1))
-    }
-    val span = math.max(1L, (hi - lo) / slices + 1)
-    // ONE pass writes every slice file (hive-partitioned by slice index,
-    // single task so each leaf is one part file) instead of `slices`
-    // full-input filter+write jobs — the N-scan setup was a measured
-    // chunk of the streaming family's bench floor. The sentinel
-    // (watermark flush for append-mode aggregation replays; foreachBatch
-    // replays omit it) RIDES THE LAST SLICE (round-20): the watermark is
-    // computed from the max event time at the END of each micro-batch,
-    // so a sentinel in the final data batch advances it exactly as a
-    // sentinel-only batch did, and the trailing no-data batch still
-    // does the flush — one whole micro-batch (its job + its planning/
-    // WAL/state-commit overhead) removed from every replay.
-    val sliced = input.withColumn("__slice",
-      expr(s"(cast(`$tsCol` as bigint) - ${lo}L) div ${span}L"))
-    val all = sentinelOpt.fold(sliced)(sent =>
-      sliced.unionByName(sent.withColumn("__slice", lit((slices - 1).toLong))))
-    writeSliceFiles(all, root, src,
-      i => if (i < slices) Some(f"slice$i%04d") else None)
-  }
-
-  /** Write a `__slice`-stamped frame as one ascending-mtime file per
-    * slice under `src` via a single hive-partitioned job. `nameOf` maps
-    * a slice index to its file name (None = unexpected index, fails).
-    * Empty slices produce no file — same observable behavior as the
-    * old per-slice writes, whose empty files contributed no data
-    * micro-batch and therefore failed the caller's incrementality
-    * require just the same.
-    */
-  private def writeSliceFiles(all: DataFrame, root: java.nio.file.Path,
-                              src: java.nio.file.Path,
-                              nameOf: Int => Option[String]): Unit = {
-    java.nio.file.Files.createDirectories(src)
-    val tmp = root.resolve(s"__${src.getFileName}_all").toString
-    // hash-repartition BY SLICE, not coalesce(1): each slice still lands
-    // wholly in one task (one part file per slice dir — the invariant
-    // the mtime-pinned rename below needs), but distinct slices write in
-    // parallel instead of serializing the whole replay input through a
-    // single task (round-19; the slice write was a measured chunk of the
-    // per-replay floor)
-    phase("  slices:write")(
-      all.repartition(all.sparkSession.sparkContext.defaultParallelism,
-          col("__slice"))
-        .write.mode("overwrite").partitionBy("__slice").parquet(tmp))
-    val baseMtime = (System.currentTimeMillis() / 1000) * 1000 - 3600L * 1000
-    // Rows with a NULL slice value land in __slice=__HIVE_DEFAULT_PARTITION__;
-    // the old per-slice `=== i` filters dropped them silently, so skip that
-    // dir here to keep the same observable behavior (and avoid toLong blowing
-    // up on the sentinel dir name).
-    Option(new java.io.File(tmp).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("__slice=") &&
-        f.getName.stripPrefix("__slice=").forall(_.isDigit))
-      .sortBy(_.getName.stripPrefix("__slice=").toLong)
-      .foreach { dir =>
-        val i = dir.getName.stripPrefix("__slice=").toInt
-        val name = nameOf(i).getOrElse(
-          sys.error(s"unexpected slice index $i in ${dir.getPath}"))
-        val part = Option(dir.listFiles()).getOrElse(Array.empty)
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-          .getOrElse(sys.error(s"no part file written for slice $i"))
-        val dst = src.resolve(s"$name.parquet").toFile
-        require(part.renameTo(dst), s"rename failed: $part -> $dst")
-        require(dst.setLastModified(baseMtime + i * 60000L),
-          s"cannot pin mtime for $dst")
-      }
-  }
-
-  /** Replay `input` as `slices` files ordered by `orderCol` and hand
-    * each micro-batch's frame to `onBatch` — the `foreachBatch` half of
-    * the harness, for sinks that are STATEMENTS rather than appends
-    * (CDC upsert into a keyed table, warehouse MERGE). No watermark and
-    * no sentinel: emission IS the callback, which Structured Streaming
-    * invokes strictly in batch order with batch N+1 not starting until
-    * N's callback returns — exactly the ordering a merge sequence
-    * needs. Empty batches (possible when a slice range holds no rows)
-    * are skipped. The incrementality require is the same as
-    * [[replayFileStream]]'s: the work must actually arrive split.
-    */
-  def replayForeachBatch(input: DataFrame, orderCol: String, slices: Int,
-                         bounds: Option[(Long, Long)] = None)
-                        (onBatch: DataFrame => Unit): Unit = {
-    val spark = input.sparkSession
-    require(slices >= 2, s"replayForeachBatch: need >= 2 slices, got $slices")
-    val root = java.nio.file.Files.createTempDirectory(scratchParent, "replayfb_")
-    val src = root.resolve("src")
-    writeSlices(input, orderCol, None, slices, root, src, bounds)
-    val q = spark.readStream
-      .schema(input.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src.toString)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!df.isEmpty) onBatch(df.toDF())
-      }
-      .option("checkpointLocation", root.resolve("ck").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    streamRanSinceTeardown = true
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= slices,
-      s"replayForeachBatch: expected >= $slices data micro-batches, saw " +
-        s"$dataBatches - the run was not incremental")
-  }
-
-  /** [[replayForeachBatch]] with a mid-stream STOP + RESTART — the
-    * exactly-once sink surface: run 1 consumes slices 0..splitAt-1 and
-    * terminates; the remaining slices land and run 2 RESUMES from the
-    * same checkpoint (verified: its first batchId strictly follows run
-    * 1's last — a sink keyed on batchId therefore sees each batch id
-    * exactly once across the two processes, which is the contract an
-    * idempotent commit composes with). `onBatch(df, batchId)` gets the
-    * real batch ids so sinks can implement batchId-keyed idempotence.
-    */
-  def replayForeachBatchRestart(input: DataFrame, orderCol: String,
-                                slices: Int, splitAt: Int,
-                                bounds: Option[(Long, Long)] = None)
-                               (onBatch: (DataFrame, Long) => Unit): Unit = {
-    val spark = input.sparkSession
-    require(slices >= 3, s"replayForeachBatchRestart: need >= 3 slices, got $slices")
-    require(splitAt >= 1 && splitAt < slices,
-      s"replayForeachBatchRestart: splitAt must cut the replay in two, got $splitAt/$slices")
-    val root = java.nio.file.Files.createTempDirectory(scratchParent, "replayfbr_")
-    val src = root.resolve("src")
-    val (lo, hi) = bounds.getOrElse {
-      val mm = input.agg(min(col(orderCol)).cast("long").as("lo"),
-        max(col(orderCol)).cast("long").as("hi")).head()
-      require(!mm.isNullAt(0), "replayForeachBatchRestart: empty input")
-      (mm.getLong(0), mm.getLong(1))
-    }
-    val span = math.max(1L, (hi - lo) / slices + 1)
-    def writeSlicePhase(range: Range): Unit = {
-      val sliced = input.withColumn("__slice",
-          expr(s"(cast(`$orderCol` as bigint) - ${lo}L) div ${span}L"))
-        .filter(col("__slice").isin(range.map(_.toLong): _*))
-      writeSliceFiles(sliced, root, src,
-        i => if (range.contains(i)) Some(f"slice$i%04d") else None)
-    }
-    def startRun(): org.apache.spark.sql.streaming.StreamingQuery =
-      spark.readStream
-        .schema(input.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-        .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          if (!df.isEmpty) onBatch(df.toDF(), id)
-        }
-        .option("checkpointLocation", root.resolve("ck").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-
-    writeSlicePhase(0 until splitAt)
-    val q1 = startRun()
-    q1.awaitTermination()
-    val q1Data = q1.recentProgress.count(_.numInputRows > 0)
-    val q1LastBatch = q1.recentProgress.map(_.batchId).foldLeft(-1L)(math.max)
-    require(q1Data >= splitAt,
-      s"replayForeachBatchRestart: run 1 expected >= $splitAt data micro-batches, saw $q1Data")
-
-    writeSlicePhase(splitAt until slices)
-    val q2 = startRun()
-    q2.awaitTermination()
-    streamRanSinceTeardown = true
-    val q2Data = q2.recentProgress.count(_.numInputRows > 0)
-    val q2FirstBatch = q2.recentProgress.map(_.batchId).foldLeft(Long.MaxValue)(math.min)
-    require(q2Data >= slices - splitAt,
-      s"replayForeachBatchRestart: run 2 expected >= ${slices - splitAt} data " +
-        s"micro-batches, saw $q2Data")
-    require(q2FirstBatch > q1LastBatch,
-      s"replayForeachBatchRestart: run 2 did not resume from the checkpoint " +
-        s"(first batch $q2FirstBatch vs run-1 last $q1LastBatch)")
-  }
-
-  /** Run a STATEFUL transform in UPDATE output mode and capture every
-    * micro-batch's emission with its batch id — the dashboard-refresh
-    * semantics append mode can't show: a key re-emits in EVERY batch
-    * where its aggregate changed, and the last write per key is the
-    * final state. No watermark sentinel (update emits without
-    * watermark gating) and no watermark needed on the transform for a
-    * bounded replay. Returns the raw captured updates
-    * (transform columns + `__batch`); callers reduce last-writer-wins
-    * themselves so the per-batch emission trail stays checkable.
-    */
-  def replayUpdateMode(input: DataFrame, tsCol: String, slices: Int,
-                       statePartitions: Int = 4,
-                       bounds: Option[(Long, Long)] = None)
-                      (transform: DataFrame => DataFrame): DataFrame = {
-    val spark = input.sparkSession
-    require(slices >= 2, s"replayUpdateMode: need >= 2 slices, got $slices")
-    val root = java.nio.file.Files.createTempDirectory(scratchParent, "replayupd_")
-    val src = root.resolve("src")
-    writeSlices(input, tsCol, None, slices, root, src, bounds)
-    val out = root.resolve("out").toString
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.get(shuffleKey)
-    val q = try {
-      spark.conf.set(shuffleKey, statePartitions.toString)
-      spark.readStream
-        .schema(input.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-        .transform(transform)
-        .writeStream
-        .outputMode("update")
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-            df.withColumn("__batch", lit(id))
-              .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", root.resolve("ck").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    } finally spark.conf.set(shuffleKey, savedShuffle)
-    q.awaitTermination()
-    streamRanSinceTeardown = true
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= slices,
-      s"replayUpdateMode: expected >= $slices data micro-batches, saw " +
-        s"$dataBatches - the run was not incremental")
-    spark.read.parquet(out)
-  }
-
-  def replayFileStream(input: DataFrame, tsCol: String, sentinel: DataFrame,
-                       slices: Int, statePartitions: Int = 4,
-                       sessionConfs: Map[String, String] = Map.empty,
-                       bounds: Option[(Long, Long)] = None)
-                      (transform: DataFrame => DataFrame): DataFrame = {
-    val spark = input.sparkSession
-    require(slices >= 2, s"replayFileStream: need >= 2 slices to exercise " +
-      s"cross-batch state, got $slices")
-    val root = java.nio.file.Files.createTempDirectory(scratchParent, "replay_")
-    val src = root.resolve("src")
-    phase("writeSlices")(
-      writeSlices(input, tsCol, Some(sentinel), slices, root, src, bounds))
-
-    val out = root.resolve("out").toString
-    // State partition count is FROZEN INTO THE CHECKPOINT at query
-    // start (spark.sql.shuffle.partitions), so it must be sized to the
-    // replayed state volume, not inherited from the session's batch
-    // tuning: every micro-batch commits one store delta per partition,
-    // and 32 near-empty partitions × (slices + no-data batches) is
-    // pure fixed overhead — measured ~2 s per replay at gate scale.
-    // Restored after start() (the running query keeps its own copy);
-    // results are partitioning-independent either way (determinism
-    // gate pins this). `sessionConfs` rides the same set/restore window
-    // (e.g. the RocksDB state-store provider transformWithState needs).
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.get(shuffleKey)
-    val savedConfs = sessionConfs.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    val q = try {
-      spark.conf.set(shuffleKey, statePartitions.toString)
-      sessionConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-      phase("start")(spark.readStream
-        .schema(input.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-        .transform(transform)
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", root.resolve("ck").toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start())
-    } finally {
-      spark.conf.set(shuffleKey, savedShuffle)
-      savedConfs.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-    phase("awaitTermination")(q.awaitTermination())
-    streamRanSinceTeardown = true
-    lastProgress = q.recentProgress.toIndexedSeq.map(_.json)
-    if (streamDebug) lastProgress.foreach(p => System.err.println(s"[stream-progress] $p"))
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= slices,
-      s"replayFileStream: expected >= $slices data micro-batches, saw " +
-        s"$dataBatches - the run was not incremental")
-    spark.read.parquet(out)
-  }
-
-  /** CHECKPOINT-RESTART replay — the state-RECOVERY surface. Same
-    * slicing/sentinel/mtime rules as [[replayFileStream]], but the
-    * replay is driven by TWO sequential `StreamingQuery` lifetimes
-    * sharing one checkpoint and one sink:
-    *
-    *   1. only the first `splitAt` slice files exist; query #1 runs
-    *      them to completion (`Trigger.AvailableNow`) and STOPS — its
-    *      aggregation state (partial windows/sessions straddling the
-    *      split) and its watermark are now only in the checkpoint;
-    *   2. the remaining slices plus the sentinel are written and query
-    *      #2 starts AGAINST THE SAME CHECKPOINT — it must resume from
-    *      the recorded offsets (batch ids continue; already-processed
-    *      files are not re-read) and restore the state store, or the
-    *      straddling windows emit as duplicate partials / doubled
-    *      counts and the DuckDB oracle compare fails.
-    *
-    * Because the caller's `lateness` covers the whole replayed span,
-    * the watermark stays below every real window end until the
-    * sentinel, so ALL emission happens in query #2 — the entire run-1
-    * contribution reaches the sink purely via recovered state. The
-    * resume (not restart-from-scratch) is asserted structurally: query
-    * #2's batch ids must start strictly after query #1's last.
-    *
-    * 100 TB shape: this is the production failure/redeploy path — on a
-    * real cluster every long-running streaming job is stopped and
-    * restarted (rollouts, preemptions, crashes) and correctness rests
-    * exactly on this checkpoint contract, not on any single query
-    * lifetime.
-    */
-  def replayFileStreamRestart(input: DataFrame, tsCol: String, sentinel: DataFrame,
-                              slices: Int, splitAt: Int, statePartitions: Int = 4,
-                              bounds: Option[(Long, Long)] = None)
-                             (transform: DataFrame => DataFrame): DataFrame = {
-    val spark = input.sparkSession
-    // one slice per query lifetime is the minimum that pins the
-    // contract: run 1 builds state, run 2 must recover it (the restart
-    // boundary IS the slice boundary); the sentinel rides with run 2
-    require(slices >= 2, s"replayFileStreamRestart: need >= 2 slices, got $slices")
-    require(splitAt >= 1 && splitAt < slices,
-      s"replayFileStreamRestart: splitAt must cut the replay in two, got $splitAt/$slices")
-    val root = java.nio.file.Files.createTempDirectory(scratchParent, "replayrs_")
-    val src = root.resolve("src")
-    val (lo, hi) = bounds.getOrElse {
-      val mm = input.agg(min(col(tsCol)).cast("long").as("lo"),
-        max(col(tsCol)).cast("long").as("hi")).head()
-      require(!mm.isNullAt(0), "replayFileStreamRestart: empty input")
-      (mm.getLong(0), mm.getLong(1))
-    }
-    val span = math.max(1L, (hi - lo) / slices + 1)
-    // one partitioned pass per PHASE (before/after the restart), not
-    // one job per slice — see writeSlices; the sentinel rides run 2's
-    // LAST slice (same one-fewer-micro-batch argument as writeSlices)
-    def writeSlicePhase(range: Range, withSentinel: Boolean): Unit = {
-      val sliced = input.withColumn("__slice",
-          expr(s"(cast(`$tsCol` as bigint) - ${lo}L) div ${span}L"))
-        .filter(col("__slice").isin(range.map(_.toLong): _*))
-      val all = if (!withSentinel) sliced
-        else sliced.unionByName(sentinel.withColumn("__slice", lit((slices - 1).toLong)))
-      writeSliceFiles(all, root, src,
-        i => if (range.contains(i)) Some(f"slice$i%04d") else None)
-    }
-
-    val out = root.resolve("out").toString
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.get(shuffleKey)
-    def startRun(): org.apache.spark.sql.streaming.StreamingQuery =
-      try {
-        spark.conf.set(shuffleKey, statePartitions.toString)
-        spark.readStream
-          .schema(input.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src.toString)
-          .transform(transform)
-          .writeStream
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", root.resolve("ck").toString)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      } finally spark.conf.set(shuffleKey, savedShuffle)
-
-    writeSlicePhase(0 until splitAt, withSentinel = false)
-    val q1 = startRun()
-    q1.awaitTermination()
-    val q1Data = q1.recentProgress.count(_.numInputRows > 0)
-    val q1LastBatch = q1.recentProgress.map(_.batchId).foldLeft(-1L)(math.max)
-    require(q1Data >= splitAt,
-      s"replayFileStreamRestart: run 1 expected >= $splitAt data micro-batches, saw $q1Data")
-
-    writeSlicePhase(splitAt until slices, withSentinel = true)
-    val q2 = startRun()
-    q2.awaitTermination()
-    streamRanSinceTeardown = true
-    val q2Data = q2.recentProgress.count(_.numInputRows > 0)
-    val q2FirstBatch = q2.recentProgress.map(_.batchId).foldLeft(Long.MaxValue)(math.min)
-    // the sentinel rides the last slice, so run 2 contributes exactly
-    // its slice count of data batches
-    require(q2Data >= slices - splitAt,
-      s"replayFileStreamRestart: run 2 expected >= ${slices - splitAt} data " +
-        s"micro-batches, saw $q2Data")
-    require(q2FirstBatch > q1LastBatch,
-      s"replayFileStreamRestart: run 2 did not resume from the checkpoint " +
-        s"(first batch $q2FirstBatch vs run-1 last $q1LastBatch)")
-    spark.read.parquet(out)
-  }
-
-  /** TWO-SOURCE replay — the stream-STREAM surface: both inputs become
-    * independent time-sliced file sources (each micro-batch pulls one
-    * file from each, so the sides advance together through event time)
-    * and `transform` joins the two live streams. Same sentinel /
-    * lateness / mtime rules per side; same incrementality require.
-    * For an INNER stream-stream join, matches emit in the micro-batch
-    * where the second side arrives — cross-batch join STATE (a left
-    * row waiting for its right match N batches later) is exactly what
-    * this exercises.
-    */
-  def replayFileStream2(a: DataFrame, b: DataFrame, tsCol: String,
-                        sentinelA: DataFrame, sentinelB: DataFrame,
-                        slices: Int, statePartitions: Int = 4)
-                       (transform: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val spark = a.sparkSession
-    require(slices >= 2, s"replayFileStream2: need >= 2 slices, got $slices")
-    val root = java.nio.file.Files.createTempDirectory(scratchParent, "replay2_")
-    val srcA = root.resolve("srcA")
-    val srcB = root.resolve("srcB")
-    writeSlices(a, tsCol, Some(sentinelA), slices, root, srcA)
-    writeSlices(b, tsCol, Some(sentinelB), slices, root, srcB)
-    val out = root.resolve("out").toString
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    val savedShuffle = spark.conf.get(shuffleKey)
-    val q = try {
-      spark.conf.set(shuffleKey, statePartitions.toString)
-      def src(p: java.nio.file.Path, schema: org.apache.spark.sql.types.StructType) =
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(p.toString)
-      transform(src(srcA, a.schema), src(srcB, b.schema))
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", root.resolve("ck").toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    } finally spark.conf.set(shuffleKey, savedShuffle)
-    q.awaitTermination()
-    streamRanSinceTeardown = true
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= slices,
-      s"replayFileStream2: expected >= $slices data micro-batches, saw " +
-        s"$dataBatches - the run was not incremental")
-    spark.read.parquet(out)
+      .start())
   }
 }

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, StreamExec}
 import graft.streaming.EventStreams.Event
+import graft.streaming.StreamExec.{Arrivals, Callback, Sliced, Update}
 import graft.operators.Relational
 
 class StreamingSpec extends SparkSpec {
@@ -531,19 +532,109 @@ class StreamingSpec extends SparkSpec {
     assert(EventStreams.sessionizeBatch(split.toDS(), gapUs).count() == 2)
   }
 
-  test("replayForeachBatch delivers one ordered batch per slice") {
+  test("replay: a callback sink gets one ordered batch per slice") {
     // the CDC-merge contract (s12) rests on two properties of the
     // harness: each version arrives as its OWN micro-batch, and
     // callbacks run strictly in version order — pin both
     val log = (1 to 3).flatMap(v => (1 to 5).map(k => (k.toLong, v.toLong)))
       .toDF("k", "version")
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    graft.streaming.StreamExec.replayForeachBatch(log, "version", 3) { b =>
+    StreamExec.replay(Seq(Sliced(log, "version", 3)), Callback { (b, _) =>
       val r = b.agg(min(col("version")), max(col("version")), count(lit(1))).head()
       seen.synchronized { seen += ((r.getLong(0), r.getLong(1), r.getLong(2))); () }
-    }
+    })()
     assert(seen.toSeq == Seq((1L, 1L, 5L), (2L, 2L, 5L), (3L, 3L, 5L)),
       s"batches arrived merged or out of order: $seen")
+  }
+
+  test("replay fails loudly when the bounds put rows on a negative slice") {
+    // bounds (2, 3) over versions 1..3: version 1 lands on slice -1,
+    // which must be an error naming the bounds, not five dropped rows
+    val log = (1 to 3).flatMap(v => (1 to 5).map(k => (k.toLong, v.toLong)))
+      .toDF("k", "version")
+    val delivered = new java.util.concurrent.atomic.AtomicLong()
+    val e = intercept[RuntimeException] {
+      StreamExec.replay(Seq(Sliced(log, "version", 2, bounds = Some((2L, 3L)))),
+        Callback { (b, _) => delivered.addAndGet(b.count()); () })()
+    }
+    assert(e.getMessage.contains("bounds (2, 3)"), e.getMessage)
+    assert(delivered.get() == 0L, s"${delivered.get()} rows were delivered before the error")
+  }
+
+  test("replay modes match their batch twins") {
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    val hourUs = 3600L * us
+    def events(ids: Range, tsUs: Long) =
+      ids.map(i => (i.toLong, tsUs + i * us)).toDF("event_id", "ts_us")
+    def hourly(st: org.apache.spark.sql.DataFrame) =
+      st.withColumn("ts", timestamp_micros(col("ts_us")))
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour").as("w"))
+        .agg(count(lit(1)).as("cnt"))
+        .select(unix_timestamp(col("w.start")).as("bucket"), col("cnt"))
+    val cases: Seq[(String, () => (Seq[String], Seq[String]))] = Seq(
+      // UPDATE mode: a key re-emits in every batch that changed it, so
+      // its emissions = the slices holding it (span 4 over t = 0..11)
+      "update-mode capture" -> { () =>
+        val ev = ((0 until 12).map(t => (t.toLong, "a")) ++
+          (0 until 4).map(t => (t.toLong, "b")) ++
+          (4 until 12).map(t => (t.toLong, "c"))).toDF("t", "k")
+        val upd = StreamExec.replay(Seq(Sliced(ev, "t", 3)), Update) {
+          case Seq(st) => st.groupBy("k").agg(count(lit(1)).as("cnt"))
+        }
+        val got = upd.groupBy("k").agg(
+          max(struct(col("__batch"), col("cnt"))).getField("cnt").as("cnt"),
+          count(lit(1)).as("n_updates"))
+        val twin = ev.groupBy("k").agg(count(lit(1)).as("cnt"),
+          countDistinct(expr("t div 4")).as("n_updates"))
+        (canon(got), canon(twin))
+      },
+      // two sources, each cut by its OWN bounds: every id's left row and
+      // right row land in different batches, so each match is made
+      // against join state
+      "two-source inner join" -> { () =>
+        val left = (0 until 10).map(i => (i.toLong, i.toLong)).toDF("id", "ta")
+        val right = (0 until 10).map(i => (i.toLong, 109L - i)).toDF("id", "tb")
+        val got = StreamExec.replay(Seq(Sliced(left, "ta", 2), Sliced(right, "tb", 2))) {
+          case Seq(l, r) => l.join(r, "id")
+        }
+        (canon(got.select("id", "ta", "tb")), canon(left.join(right, "id")))
+      },
+      // explicit arrival order: two advancer batches move the watermark
+      // (and evict the early window) before the late batch arrives, so
+      // it is dropped; the sentinel batch flushes the advancers' windows
+      "explicit arrival order drops a late batch" -> { () =>
+        val early = events(0 until 3, 0L)
+        val adv = Seq(events(10 until 12, 10 * hourUs), events(20 until 22, 11 * hourUs))
+        val late = events(30 until 32, 0L)
+        val sentinel = events(-1 until 0, 100 * hourUs + us)
+        val got = StreamExec.replay(Seq(Arrivals(Seq(early) ++ adv ++ Seq(late, sentinel)))) {
+          case Seq(st) => hourly(st)
+        }
+        (canon(got), canon(hourly(adv.foldLeft(early)(_ unionByName _))))
+      },
+      // callback restart: run 2 resumes the checkpoint, so batch ids run
+      // on across the cut and each version is delivered exactly once
+      "callback restart" -> { () =>
+        val log = (1 to 4).flatMap(v => (1 to 5).map(k => (k.toLong, v.toLong)))
+          .toDF("k", "version")
+        val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+        StreamExec.replay(Seq(Sliced(log, "version", 4)), Callback { (b, id) =>
+          val r = b.agg(min(col("version")), max(col("version")), count(lit(1))).head()
+          assert(r.getLong(0) == r.getLong(1), s"batch $id merged versions")
+          seen.synchronized { seen += ((id, r.getLong(0), r.getLong(2))); () }
+        }, splitAt = Some(2))()
+        val ids = seen.map(_._1).toSeq
+        assert(ids == ids.sorted && ids.distinct == ids && ids.size == 4,
+          s"batch ids did not continue across the restart: $seen")
+        (seen.map { case (_, v, n) => s"$v|$n" }.toSeq.sorted,
+          canon(log.groupBy("version").count()))
+      })
+    for ((name, run) <- cases) {
+      val (got, twin) = run()
+      assert(got.nonEmpty && got == twin, s"$name diverged from its batch twin:\n got=$got\n twin=$twin")
+    }
   }
 
   private def cdfSchema(fields: (String, org.apache.spark.sql.types.DataType)*) =
@@ -558,7 +649,7 @@ class StreamingSpec extends SparkSpec {
     val ck = root.resolve("ck").toString
     val delivered = scala.collection.mutable.Buffer[(Long, Long, String, Long)]()
     def drain(schema: org.apache.spark.sql.types.StructType): Unit =
-      graft.streaming.StreamExec.cdfStreamOnce(spark, tbl, ck, schema) { (b, _) =>
+      StreamExec.cdfStreamOnce(spark, tbl, ck, schema) { (b, _) =>
         delivered ++= b.collect().map(r => (
           r.getLong(r.fieldIndex("k")),
           r.getLong(1), // the length column, whatever its current name
@@ -596,7 +687,7 @@ class StreamingSpec extends SparkSpec {
     assert(delivered.isEmpty, "a drain with nothing new must deliver nothing")
     val ck2 = root.resolve("ck2").toString
     val fresh = scala.collection.mutable.Buffer[(Long, Long, String, Long)]()
-    graft.streaming.StreamExec.cdfStreamOnce(spark, tbl, ck2,
+    StreamExec.cdfStreamOnce(spark, tbl, ck2,
       cdfSchema("k" -> LongType, "len" -> LongType, "_change_type" -> StringType)) {
       (b, _) => fresh ++= b.collect().map(r => (
         r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
@@ -617,7 +708,7 @@ class StreamingSpec extends SparkSpec {
     val schema = cdfSchema("k" -> LongType, "v" -> LongType, "_change_type" -> StringType)
     val delivered = scala.collection.mutable.Buffer[(Long, Long, String, Long)]()
     def drain(): Unit =
-      graft.streaming.StreamExec.cdfStreamOnce(spark, tbl, ck, schema) { (b, _) =>
+      StreamExec.cdfStreamOnce(spark, tbl, ck, schema) { (b, _) =>
         delivered ++= b.collect().map(r => (
           r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
       }
@@ -660,7 +751,7 @@ class StreamingSpec extends SparkSpec {
     val schema = cdfSchema("k" -> LongType, "v" -> LongType, "_change_type" -> StringType)
     val delivered = scala.collection.mutable.Buffer[(Long, Long, String, Long, Long)]()
     def drain(): Unit =
-      graft.streaming.StreamExec.cdfStreamOnce(spark, tbl, ck, schema) { (b, id) =>
+      StreamExec.cdfStreamOnce(spark, tbl, ck, schema) { (b, id) =>
         delivered ++= b.collect().map(r => (
           r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3), id))
       }
@@ -688,7 +779,7 @@ class StreamingSpec extends SparkSpec {
       s"post-bootstrap drains must deliver only new commits, got ${delivered.toSet}")
   }
 
-  test("replayFileStreamRestart: windows straddling the stop/restart boundary emit exactly once") {
+  test("replay splitAt: windows straddling the stop/restart cut emit exactly once") {
     // the s17 contract: query #1 processes half the slices and stops;
     // query #2 resumes from the same checkpoint (asserted inside the
     // harness via batch-id continuation) and must restore the partial
@@ -704,8 +795,8 @@ class StreamingSpec extends SparkSpec {
     val latenessUs = (hi - lo) + hourUs
     val sentinel = Seq((-1L, hi + latenessUs + 2 * hourUs, -1L, "__wm", 0.0))
       .toDF("event_id", "ts_us", "user_id", "event_type", "value")
-    val got = graft.streaming.StreamExec.replayFileStreamRestart(
-        ev, "ts_us", sentinel, slices = 4, splitAt = 2) { st =>
+    val got = StreamExec.replay(Seq(Sliced(ev, "ts_us", 4, Some(sentinel))),
+        splitAt = Some(2)) { case Seq(st) =>
       EventStreams.windowedCounts(st, "1 hour", s"$latenessUs microseconds")
     }.filter(col("event_type") =!= "__wm")
       .select("bucket", "event_type", "cnt")

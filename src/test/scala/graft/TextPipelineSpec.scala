@@ -58,6 +58,25 @@ class TextPipelineSpec extends SparkSpec {
       "near-dedup removed docs on a second pass — clustering is not converging")
   }
 
+  test("commitBoth waits for both branches and surfaces both failures") {
+    import graft.pipeline.IncrementalPipeline.commitBoth
+    val bDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      commitBoth(throw new IllegalStateException("a failed"), {
+        Thread.sleep(500); bDone.set(true); throw new IllegalArgumentException("b failed")
+      })
+    }
+    assert(bDone.get(), "commitBoth returned before branch b finished")
+    assert(e.getMessage == "a failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("b failed"))
+    // b failing alone surfaces b's own error, not the future's wrapper
+    val eb = intercept[IllegalArgumentException] {
+      commitBoth(1L, throw new IllegalArgumentException("b only"))
+    }
+    assert(eb.getMessage == "b only")
+    assert(commitBoth(1L, 2L) == 2L)
+  }
+
   test("incremental pipeline: O(delta) stages, index maintenance, cross-batch dedup") {
     val out = freshRoot("inc")
     val p = new graft.pipeline.IncrementalPipeline(
