@@ -210,8 +210,26 @@ object Bench {
     */
   private[graft] def md5Collapse(st: Long, mt: Long, procs: Int): Boolean =
     procs >= 8 && st > 0 && mt < 3L * st
-  private def md5CollapseNow: Boolean =
-    md5Collapse(md5St, md5Mt, Runtime.getRuntime.availableProcessors())
+  private def md5CollapseNow: Boolean = {
+    val cpuMax =
+      try Some(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("/sys/fs/cgroup/cpu.max")), "UTF-8"))
+      catch { case _: java.io.IOException => None }
+    md5Collapse(md5St, md5Mt, effectiveCores(cpuMax, Runtime.getRuntime.availableProcessors()))
+  }
+
+  /** The cores this process can actually run on, for the md5-collapse
+    * gate: a cgroup v2 `cpu.max` of `"<quota> <period>"` grants
+    * quota/period cores (floored, at least 1, at most `procs`); `"max
+    * <period>"` (no quota), an unreadable line or a missing file (`None`)
+    * leave `procs`. A quota-limited container otherwise reads as a
+    * many-core machine whose md5_mt "collapsed".
+    */
+  private[graft] def effectiveCores(cpuMax: Option[String], procs: Int): Int =
+    cpuMax.map(_.trim.split("\\s+").toSeq).collect {
+      case Seq(q, p) if q.toLongOption.exists(_ > 0) && p.toLongOption.exists(_ > 0) =>
+        math.max(1L, math.min(q.toLong / p.toLong, procs.toLong)).toInt
+    }.getOrElse(procs)
 
   private def jsonNum(v: Double): String = (math.round(v * 1000) / 1000.0).toString
 

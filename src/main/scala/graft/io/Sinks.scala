@@ -1,6 +1,8 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.StructType
 import graft.core.{Catalog, TableEntry, TableFormat}
 
 /** Credential provider seam. The reference fetches Snowflake credentials
@@ -77,12 +79,19 @@ object Sinks {
     * Spark's parquet default. `partitionBy` empty mirrors the reference's
     * `partitionKeys=[]`; at 100 TB callers pass real partition keys so
     * downstream reads get partition pruning.
+    *
+    * The registration carries the data columns' schema as parquet stores
+    * it (every field nullable), so a catalog read starts no footer-
+    * inference job. Partition columns are left out of it: the reader
+    * appends them from the directory names with the same inferred types
+    * a schema-less read gives.
     */
   def parquet(df: DataFrame, path: String, catalog: Option[Catalog] = None,
               name: String = "", partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
+    val dataSchema = StructType(df.schema.filterNot(f => partitionBy.contains(f.name)))
     catalog.foreach(_.register(if (name.nonEmpty) name else path,
-      TableEntry(path, TableFormat.Parquet)))
+      TableEntry(path, TableFormat.Parquet, Some(bridge.asNullable(dataSchema)))))
   }
 }

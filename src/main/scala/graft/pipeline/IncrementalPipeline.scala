@@ -206,21 +206,10 @@ object IncrementalPipeline {
     * write a small job whose tail otherwise leaves the session idle —
     * round-20: commit_v0/v1 were ~0.5 s each of back-to-back small
     * writes). Job-descriptions and commit locks are per-table/thread.
-    * Always waits for `b`, also when `a` throws, so no commit is still
+    * Always waits for both, also when one throws, so no commit is still
     * running when the caller sees the failure; when both fail, `b`'s
-    * error rides `a`'s as suppressed.
+    * error rides `a`'s as suppressed ([[Parallel.all]]).
     */
-  private[graft] def commitBoth(a: => Long, b: => Long): Long = {
-    val fb = new java.util.concurrent.FutureTask[Long](() => b)
-    val th = new Thread(fb, "p2-commit-b"); th.setDaemon(true); th.start()
-    val ra = try Right(a) catch { case e: Throwable => Left(e) }
-    val rb = try Right(fb.get()) catch {
-      case e: java.util.concurrent.ExecutionException => Left(e.getCause)
-    }
-    (ra, rb) match {
-      case (Right(x), Right(y)) => math.max(x, y)
-      case (Left(ea), _) => rb.left.foreach(ea.addSuppressed); throw ea
-      case (_, Left(eb)) => throw eb
-    }
-  }
+  private[graft] def commitBoth(a: => Long, b: => Long): Long =
+    Parallel.all(Seq(() => a, () => b)).max
 }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.{Catalog, Sessions, TableEntry, TableFormat}
+import graft.core.{Catalog, Sessions}
 import graft.io.{BronzeSource, CsvBronzeSource, Sinks, LocalWarehouseSink, WarehouseSink}
 import graft.model.Schemas
 import graft.quality.DataQuality
@@ -14,6 +14,18 @@ import graft.gold.Builders
   * catalog (per-stage materialization = reprocessing checkpoints), with
   * the reference's `ColumnCount > 0` DQ gate and duration logging per
   * stage.
+  *
+  * Within a layer the independent stages run concurrently, one fresh
+  * thread each ([[Parallel.all]]): the six bronze ingests, the six silver
+  * cleanses, and the two gold dims (fact_sales follows them, since it
+  * joins both). At pipeline sizes a stage is bound by driver latency,
+  * not data, so overlapping them is what fills the cores. A layer waits
+  * for every stage and then fails with the first failed stage in
+  * declared order, the others attached as suppressed; `dqReports` keeps
+  * the declared order whatever order the stages finish in. A stage's
+  * write is its only job: nothing reads the output back, and the next
+  * layer reads it through a catalog entry that carries its schema, so no
+  * footer-inference job runs either.
   *
   * Engine-level improvement over the reference (documented, output-
   * identical): gold frames are cached between the parquet write and the
@@ -48,26 +60,32 @@ class Runner(spark: SparkSession, source: BronzeSource, outRoot: String,
     r
   }
 
-  /** Write a stage frame and publish its DQ report (BEST_EFFORT). Metric
+  /** Write a stage frame and return its DQ report (BEST_EFFORT). Metric
     * rules ride the sink action via `observe` — one scan per stage, never
     * a second DQ-only job over the frame.
     */
   private def stage(layer: String, name: String, df: DataFrame,
-                    partitionBy: Seq[String] = Nil): DataFrame = {
+                    partitionBy: Seq[String] = Nil): DataQuality.Report = {
     val obs = DataQuality.observed(df, ruleset, s"dq_${layer}_$name")
-    val path = s"$outRoot/$layer/$name"
-    Sinks.parquet(obs.df, path, Some(catalog), s"$layer.$name", partitionBy)
-    dqReports(s"$layer.$name") = obs.report()
-    spark.read.parquet(path)
+    Sinks.parquet(obs.df, s"$outRoot/$layer/$name", Some(catalog), s"$layer.$name", partitionBy)
+    obs.report()
   }
+
+  /** Run a layer's independent stages concurrently; each builds its frame
+    * on its own thread. Reports land in `dqReports` in declared order.
+    */
+  private def stages(layer: String)(named: (String, () => DataQuality.Report)*): Unit =
+    Parallel.all(named.map(_._2)).zip(named).foreach { case (rep, (name, _)) =>
+      dqReports(s"$layer.$name") = rep
+    }
 
   /** Bronze: 1:1 typed ingest through the source seam, one table per
     * source (CSV file or JDBC table).
     */
   def runBronze(): Unit = timed("bronze") {
-    Schemas.sourceCsv.keys.foreach { name =>
-      stage("bronze", name, source.read(spark, name))
-    }
+    stages("bronze")(Schemas.sourceCsv.keys.toSeq.map { name =>
+      name -> (() => stage("bronze", name, source.read(spark, name)))
+    }: _*)
   }
 
   private def bronze(name: String) = catalog.read(s"bronze.$name")
@@ -75,25 +93,35 @@ class Runner(spark: SparkSession, source: BronzeSource, outRoot: String,
 
   /** Silver: the six cleansing transforms (SURVEY.md §2.9). */
   def runSilver(): Unit = timed("silver") {
-    stage("silver", "crm_cust_info", Transforms.custInfo(bronze("crm_cust_info")))
-    stage("silver", "crm_prd_info", Transforms.prdInfo(bronze("crm_prd_info")))
-    stage("silver", "crm_sales_details", Transforms.salesDetails(bronze("crm_sales_details")))
-    stage("silver", "erp_cust_az12", Transforms.custAz12(bronze("erp_cust_az12"), clock))
-    stage("silver", "erp_loc_a101", Transforms.locA101(bronze("erp_loc_a101")))
-    stage("silver", "erp_px_cat_g1v2", Transforms.pxCatG1v2(bronze("erp_px_cat_g1v2")))
+    def cleanse(name: String)(transform: DataFrame => DataFrame) =
+      name -> (() => stage("silver", name, transform(bronze(name))))
+    stages("silver")(
+      cleanse("crm_cust_info")(Transforms.custInfo(_)),
+      cleanse("crm_prd_info")(Transforms.prdInfo),
+      cleanse("crm_sales_details")(Transforms.salesDetails),
+      cleanse("erp_cust_az12")(Transforms.custAz12(_, clock)),
+      cleanse("erp_loc_a101")(Transforms.locA101),
+      cleanse("erp_px_cat_g1v2")(Transforms.pxCatG1v2))
   }
+
+  /** A gold dim: one cached copy feeds the parquet stage and the
+    * warehouse write, and is released whether or not they succeed. */
+  private def dim(name: String, table: String)(build: => DataFrame) =
+    name -> (() => {
+      val df = build.cache()
+      try { val rep = stage("gold", name, df); warehouse.write(df, table); rep }
+      finally df.unpersist()
+    })
 
   /** Gold: star-schema assembly + dual sink (parquet + warehouse). */
   def runGold(): Unit = timed("gold") {
-    val dimCustomers = Builders.dimCustomers(
-      silver("crm_cust_info"), silver("erp_cust_az12"), silver("erp_loc_a101")).cache()
-    stage("gold", "dim_customers", dimCustomers)
-    warehouse.write(dimCustomers, "customer_sch.dim_customers")
-
-    val dimProducts = Builders.dimProducts(
-      silver("crm_prd_info"), silver("erp_px_cat_g1v2")).cache()
-    stage("gold", "dim_products", dimProducts)
-    warehouse.write(dimProducts, "product_sch.dim_products")
+    stages("gold")(
+      dim("dim_customers", "customer_sch.dim_customers") {
+        Builders.dimCustomers(silver("crm_cust_info"), silver("erp_cust_az12"), silver("erp_loc_a101"))
+      },
+      dim("dim_products", "product_sch.dim_products") {
+        Builders.dimProducts(silver("crm_prd_info"), silver("erp_px_cat_g1v2"))
+      })
 
     val factSales = Builders.factSales(
       silver("crm_sales_details"),
@@ -117,15 +145,16 @@ class Runner(spark: SparkSession, source: BronzeSource, outRoot: String,
         .sortWithinPartitions("order_month", "__z")
         .drop("__z")
     }
-    stage("gold", "fact_sales", factLaidOut, partitionBy = Seq("order_month"))
-    // OPTIMIZE-style small-file compaction of the partitioned fact dir
-    // (partition-preserving — pruning above survives, see ScaleSpec).
-    layout.flatMap(_.compactTargetBytes).foreach { tb =>
-      graft.operators.Scale.compactParquet(spark, s"$outRoot/gold/fact_sales", tb); ()
-    }
-    warehouse.write(factSales, "sales_sch.fact_sales")
-
-    dimCustomers.unpersist(); dimProducts.unpersist(); factSales.unpersist()
+    try {
+      dqReports("gold.fact_sales") =
+        stage("gold", "fact_sales", factLaidOut, partitionBy = Seq("order_month"))
+      // OPTIMIZE-style small-file compaction of the partitioned fact dir
+      // (partition-preserving — pruning above survives, see ScaleSpec).
+      layout.flatMap(_.compactTargetBytes).foreach { tb =>
+        graft.operators.Scale.compactParquet(spark, s"$outRoot/gold/fact_sales", tb); ()
+      }
+      warehouse.write(factSales, "sales_sch.fact_sales")
+    } finally factSales.unpersist()
   }
 
   def runAll(): Unit = { runBronze(); runSilver(); runGold() }

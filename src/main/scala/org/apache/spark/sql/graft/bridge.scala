@@ -140,6 +140,11 @@ object bridge {
     * identity-hash fallback. Cache keys use it so entries from two
     * session generations can never collide the way identityHashCode can.
     */
+  /** The schema with every field nullable, nested fields included — what
+    * a parquet write stores and a parquet read reports. */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   def sessionUUID(s: org.apache.spark.sql.SparkSession): String = s match {
     case c: org.apache.spark.sql.classic.SparkSession => c.sessionUUID
     case other => s"idh${System.identityHashCode(other)}"

@@ -379,6 +379,22 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.md5Collapse(0, 0, 32))
   }
 
+  test("md5 collapse gates on the cgroup cpu.max quota, not the processor count") {
+    // no quota: the processor count stands
+    assert(Bench.effectiveCores(Some("max 100000\n"), 32) == 32)
+    // a 4-core quota on a 32-processor host: mt ~ 4x st is the honest
+    // reading there, and the small-machine exemption applies
+    assert(Bench.effectiveCores(Some("400000 100000\n"), 32) == 4)
+    assert(!Bench.md5Collapse(373, 1300, Bench.effectiveCores(Some("400000 100000"), 32)))
+    // no cgroup v2 file: the processor count stands
+    assert(Bench.effectiveCores(None, 32) == 32)
+    // floored, at least one core, never above the processor count
+    assert(Bench.effectiveCores(Some("250000 100000"), 32) == 2)
+    assert(Bench.effectiveCores(Some("50000 100000"), 32) == 1)
+    assert(Bench.effectiveCores(Some("6400000 100000"), 32) == 32)
+    assert(Bench.effectiveCores(Some("garbage"), 32) == 32)
+  }
+
   test("full artifact carries qcpu/qgc/spread/canary evidence") {
     val withEvidence = fakeResults.map { case (k, r) =>
       k -> r.copy(cpuRuns = r.runs.map(_ * 2.0), gcRuns = r.runs.map(_ => 0.05)) }
