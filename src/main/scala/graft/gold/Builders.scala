@@ -32,11 +32,11 @@ object Builders {
     val joined = ci
       .join(ca, col("ci.cst_key") === col("ca.cid"), "left")
       .join(la, col("ci.cst_key") === col("la.cid"), "left")
-    // surrogateKeyScalable (round-20): identical dense 1..N in the same
-    // (cst_id NULLS FIRST, cst_key) order, WITHOUT the single-partition
-    // global WindowExec the reference's row_number() OVER (ORDER BY ...)
-    // costs — cst_id is the rank key (nulls land in the dedicated
-    // nulls-first bucket), cst_key tie-breaks inside a bucket
+    // surrogateKeyScalable (Relational's bucketedRank core): identical
+    // dense 1..N in the same (cst_id NULLS FIRST, cst_key) order, WITHOUT
+    // the single-partition global WindowExec the reference's row_number()
+    // OVER (ORDER BY ...) costs — cst_id is the rank key (nulls land in
+    // the dedicated nulls-first bucket), cst_key tie-breaks inside a bucket
     val keyed = Relational.surrogateKeyScalable(joined, "customer_key",
       col("ci.cst_id"),
       Seq(col("ci.cst_id").asc_nulls_first, col("ci.cst_key").asc))

@@ -192,179 +192,120 @@ object Relational {
       .drop("__prev", "__new")
   }
 
+  /** The range-bucketed rank core behind [[prefixSumScalable]],
+    * [[ntileScalable]] and [[surrogateKeyScalable]]: an exact running
+    * total of `weight` in a global order WITHOUT the single-partition
+    * sort a `Window.orderBy` over the data costs. Rows range-bucket on
+    * `key` (cast to long, monotone ASCENDING in the desired total order;
+    * span from one eager bounds aggregate), each bucket sums `weight`
+    * locally in parallel under `order` (the full tie-broken order), and
+    * per-bucket totals — `buckets` rows, model-sized, not data-sized —
+    * come back as a broadcast of exclusive prefix offsets. Equal key
+    * values always share a bucket (ranges are disjoint in the key), so
+    * `order`'s tie-break never straddles a boundary; a fully degenerate
+    * key degrades to one bucket, i.e. the key must carry real entropy.
+    *
+    * Appends `__rank` (the inclusive global running total; with weight
+    * `1L` that is the dense 1..N `row_number`) and `__n` (the grand
+    * total), or returns None for an empty input. NULL keys (or keys
+    * whose long cast is NULL) are rejected loudly unless `nullsFirst`,
+    * which puts them in bucket -1, sorted before every value bucket and
+    * tie-broken by `order` — NULLS FIRST, as Spark's default ASC sort.
+    */
+  private def bucketedRank(df: DataFrame, op: String, key: Column, order: Seq[Column],
+                           weight: Column, buckets: Int, nullsFirst: Boolean): Option[DataFrame] = {
+    val in = df.withColumn("__k", key.cast("long"))
+    val bounds = in.agg(min("__k"), max("__k"), count(lit(1)), count("__k")).head()
+    val (rows, nulls) = (bounds.getLong(2), bounds.getLong(2) - bounds.getLong(3))
+    if (rows == 0L) return None
+    require(nullsFirst || nulls == 0L,
+      s"$op: key $key has $nulls NULL values; coalesce the key to a sentinel " +
+        "(or filter nulls) first — null keys cannot be range-bucketed into a total order")
+    val (lo, hi) = if (nulls == rows) (0L, 0L) else (bounds.getLong(0), bounds.getLong(1))
+    // hi - lo in raw Long arithmetic wraps for ranges wider than
+    // Long.MaxValue (hash-derived keys spanning both extremes), which
+    // would silently scramble bucket order — fail loudly instead
+    require(hi - lo >= 0, s"$op: key $key range [$lo, $hi] exceeds Long.MaxValue; " +
+      "pre-bucket wide hash keys on their high bits first")
+    val span = math.max(1L, (hi - lo) / buckets + 1)
+    // `div` (integer division), not `/`: Column `/` on longs is double
+    // division then truncation, whose boundaries drift from the integer
+    // geometry for key spans above 2^53
+    val bucketed = in.withColumn("__b",
+      coalesce(expr(s"(__k - ${lo}L) div ${span}L"), lit(-1L))).drop("__k")
+    val local = bucketed.withColumn("__cum", sum(weight).over(
+      Window.partitionBy("__b").orderBy(order: _*).rowsBetween(Window.unboundedPreceding, 0)))
+    // per-bucket totals aggregate the bucketed input (map-side partial
+    // sums), not the local window's output: no plan reuses the window's
+    // exchange, so reading totals off it replays the sort and the window
+    val wAll = Window.partitionBy(lit(0)).orderBy("__b")
+    val offsets = bucketed.groupBy("__b").agg(sum(weight).as("__bt")).select(col("__b"),
+      coalesce(sum("__bt").over(wAll.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__off"),
+      sum("__bt").over(wAll.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).as("__n"))
+    Some(local.join(broadcast(offsets), "__b")
+      .withColumn("__rank", col("__cum") + col("__off"))
+      .drop("__b", "__cum", "__off"))
+  }
+
   /** Scalable exact prefix sum: running total of `valueCol` in `orderCol`
-    * order (inclusive), WITHOUT the global single-partition window a naive
-    * `Window.orderBy(orderCol)` costs. Rows are bucketed by range over
-    * `orderCol` (span derived from one bounded min/max agg), each bucket
-    * computes its local cumsum in parallel, and per-bucket prefix offsets
-    * — `buckets` rows, model-sized, not data-sized — are broadcast back.
-    * The only global sort is over the offsets frame. `orderCol` must be
-    * unique (the usual id column) so the prefix order is total.
+    * order (inclusive) — [[bucketedRank]] weighted by `valueCol`.
+    * `orderCol` must be unique (the usual id column) so the prefix order
+    * is total, and non-NULL.
     *
     * This is the building block for running-offset layouts at 100 TB:
     * shard packing (m7), byte-offset manifests, cumulative token budgets.
     */
   def prefixSumScalable(df: DataFrame, orderCol: String, valueCol: String,
-                        outCol: String, buckets: Int = 64): DataFrame = {
-    val mm = df.agg(min(col(orderCol)).cast("long").as("lo"),
-      max(col(orderCol)).cast("long").as("hi")).head()
-    if (mm.isNullAt(0)) return df.withColumn(outCol, lit(null).cast("long"))
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    // hi - lo in raw Long arithmetic wraps for ranges wider than
-    // Long.MaxValue (hash-derived keys spanning both extremes), which
-    // would silently scramble bucket order — fail loudly instead; such
-    // keys should be range-bucketed on their high bits by the caller
-    require(hi - lo >= 0,
-      s"prefixSumScalable: $orderCol range [$lo, $hi] exceeds Long.MaxValue; " +
-        "pre-bucket wide hash keys before computing a running total")
-    val span = math.max(1L, (hi - lo) / buckets + 1)
-    // `div` (integer division), not `/`: Column `/` on longs is double
-    // division then truncation, whose boundaries drift from the integer
-    // geometry for order-key spans above 2^53
-    val bucketed = df.withColumn("__b",
-      expr(s"(cast(`$orderCol` as bigint) - ${lo}L) div ${span}L"))
-    val wLocal = Window.partitionBy("__b").orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = bucketed.withColumn("__cum", sum(col(valueCol)).over(wLocal))
-    val wOff = Window.partitionBy(lit(0)).orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bucketed.groupBy("__b")
-      .agg(sum(col(valueCol)).as("__bsum"))
-      .withColumn("__off", coalesce(sum(col("__bsum")).over(wOff), lit(0L)))
-      .select("__b", "__off")
-    local.join(broadcast(offsets), "__b")
-      .withColumn(outCol, col("__cum") + col("__off"))
-      .drop("__b", "__cum")
-  }
+                        outCol: String, buckets: Int = 64): DataFrame =
+    bucketedRank(df, "prefixSumScalable", col(orderCol), Seq(col(orderCol)),
+      col(valueCol), buckets, nullsFirst = false) match {
+      case None => df.withColumn(outCol, lit(null).cast("long"))
+      case Some(r) => r.withColumn(outCol, col("__rank")).drop("__rank", "__n")
+    }
 
   /** Exact `ntile(k)` over a global order WITHOUT the single-partition
     * sort `ntile(k).over(Window.orderBy(...))` costs — at 100 TB that
-    * naive frame is billions of rows sorted in one task. Same geometry
-    * as [[prefixSumScalable]]: rows are range-bucketed on `rankKey`
-    * (a long column monotone ASCENDING in the desired total order —
-    * pass the negated score for a descending sort), each bucket
-    * row_numbers locally in parallel under `order` (the full
-    * tie-broken order), and per-bucket row counts — `buckets` rows,
-    * model-sized, not data-sized — are broadcast back as prefix
-    * offsets. Every row then knows its exact global rank, and the tile
-    * is pure arithmetic on (rank, n): the first `n mod k` tiles carry
+    * naive frame is billions of rows sorted in one task. [[bucketedRank]]
+    * with weight 1 gives every row its exact global rank under `order`
+    * (`rankKey` a non-NULL long column monotone ASCENDING in it — pass
+    * the negated score for a descending sort), and the tile is pure
+    * arithmetic on (rank, n): the first `n mod k` tiles carry
     * `n div k + 1` rows, the rest `n div k` — bit-identical to SQL
-    * `ntile`. The only global sort is over the `buckets`-row offsets
-    * frame.
-    *
-    * Ties in `rankKey` always land in one range bucket (ranges are
-    * disjoint in the key), so the per-bucket sort — not a cross-bucket
-    * merge — breaks them under `order`; a fully degenerate key (every
-    * row equal) degrades to one bucket, i.e. the caller's rank key
-    * must carry real entropy, which an LM score at 1e-6 granularity
-    * does.
+    * `ntile`. An LM score at 1e-6 granularity carries the entropy the
+    * range buckets need.
     */
   def ntileScalable(df: DataFrame, k: Int, rankKey: Column, order: Seq[Column],
                     outCol: String, buckets: Int = 64): DataFrame = {
     require(k >= 1, s"ntileScalable: k must be >= 1, got $k")
-    val in = df.withColumn("__ntk", rankKey.cast("long"))
-    // null-key count rides the same single aggregate as min/max: a NULL
-    // rankKey would land in a null range bucket that the offsets frame
-    // counts (Window.orderBy sorts nulls first) but the null-unsafe
-    // equi-join on __b then drops — silently shifting every surviving
-    // row's global rank by the null count. SQL ntile has a defined
-    // nulls-first answer; this operator's contract requires a total
-    // order carried by a NON-NULL key, so a null key is a caller error
-    // surfaced loudly, not a silent divergence.
-    val mm = in.agg(min(col("__ntk")).as("lo"), max(col("__ntk")).as("hi"),
-      sum(when(col("__ntk").isNull, 1L).otherwise(0L)).as("nulls")).head()
-    if (mm.isNullAt(0)) return df.withColumn(outCol, lit(null).cast("long"))
-    require(mm.getAs[Long]("nulls") == 0L,
-      s"ntileScalable: rankKey has ${mm.getAs[Long]("nulls")} NULL values; " +
-        "coalesce the key to a sentinel (or filter nulls) before tiling — " +
-        "null keys cannot be range-bucketed into a total order")
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    // same Long-wrap guard as prefixSumScalable: a key range wider than
-    // Long.MaxValue would silently scramble bucket order
-    require(hi - lo >= 0,
-      s"ntileScalable: rankKey range [$lo, $hi] exceeds Long.MaxValue; " +
-        "pre-bucket wide hash keys before tiling")
-    val span = math.max(1L, (hi - lo) / buckets + 1)
-    val bucketed = in.withColumn("__b", expr(s"(__ntk - ${lo}L) div ${span}L"))
-    val wLocal = Window.partitionBy("__b").orderBy(order: _*)
-    val local = bucketed.withColumn("__rn", row_number().over(wLocal).cast("long"))
-    // offsets frame: per-bucket counts, exclusive prefix sum, and the
-    // grand total n — all over the bucket-count-sized frame, where a
-    // global window is bounded by construction. Counts are read off the
-    // LOCAL window's row_number (max == count), so this side shares the
-    // window's exchange instead of re-scanning the input lineage under
-    // a second aggregate (round-20; see surrogateKeyScalable).
-    val wOff = Window.partitionBy(lit(0)).orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(lit(0)).orderBy("__b")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets = local.groupBy("__b").agg(max(col("__rn")).as("__bc"))
-      .withColumn("__off", coalesce(sum(col("__bc")).over(wOff), lit(0L)))
-      .withColumn("__n", sum(col("__bc")).over(wAll))
-      .select("__b", "__off", "__n")
-    local.join(broadcast(offsets), "__b")
-      .withColumn("__gr", col("__off") + col("__rn"))
+    bucketedRank(df, "ntileScalable", rankKey, order, lit(1L), buckets,
+        nullsFirst = false) match {
+      case None => df.withColumn(outCol, lit(null).cast("long"))
       // SQL ntile split: rem = n mod k tiles of size+1 first, then size
-      .withColumn(outCol, expr(
-        s"""CASE WHEN __gr <= (__n % $k) * ((__n div $k) + 1)
-            THEN (__gr - 1) div ((__n div $k) + 1) + 1
-            ELSE (__n % $k) + (__gr - 1 - (__n % $k) * ((__n div $k) + 1)) div (__n div $k) + 1
-            END""").cast("long"))
-      .drop("__ntk", "__b", "__rn", "__off", "__n", "__gr")
+      case Some(r) => r.withColumn(outCol, expr(
+        s"""CASE WHEN __rank <= (__n % $k) * ((__n div $k) + 1)
+            THEN (__rank - 1) div ((__n div $k) + 1) + 1
+            ELSE (__n % $k) + (__rank - 1 - (__n % $k) * ((__n div $k) + 1)) div (__n div $k) + 1
+            END""").cast("long")).drop("__rank", "__n")
+    }
   }
 
-  /** Scalable surrogate key: same contract (dense 1..N following the sort
-    * order) without the global single-partition sort — the
-    * [[prefixSumScalable]]/[[ntileScalable]] value-bucket geometry:
-    * rows range-bucket on `rankKey` (a long column monotone ASCENDING in
-    * the desired total order; pass a negated key for descending),
-    * row_number locally per bucket under the full tie-broken `order`,
-    * and per-bucket counts — `buckets` rows, model-sized — broadcast
-    * back as exclusive prefix offsets. Entirely DataFrame-native: rows
-    * never leave Tungsten (the previous `rdd.zipWithIndex` round-trip
-    * deserialized every row and broke columnar scans downstream), and
-    * value-derived buckets are deterministic even when upstream row
-    * order is not (a partitioner-sampling split could drift between the
-    * count job and the data job). Equal rankKey values always share a
-    * bucket, so `order`'s tie-break never straddles a boundary.
+  /** Scalable surrogate key: the [[surrogateKey]] contract (dense 1..N
+    * following the sort order) without the global single-partition sort
+    * — [[bucketedRank]] with weight 1 on `rankKey` (a long column
+    * monotone ASCENDING in the total `order`; pass a negated key for
+    * descending). Entirely DataFrame-native, and value-derived buckets
+    * are deterministic even when upstream row order is not.
     *
     * NULL contract: rows whose `rankKey` is NULL (or whose long cast
-    * yields NULL) are NOT dropped — they land in a dedicated bucket
-    * that sorts before all value buckets, i.e. NULLS FIRST, matching
-    * Spark's default ASC sort; `order` tie-breaks within it. An
-    * all-NULL rankKey input therefore still keys every row.
+    * yields NULL) are NOT dropped — they take the lowest keys (NULLS
+    * FIRST), tie-broken by `order`. An all-NULL rankKey input therefore
+    * still keys every row.
     */
   def surrogateKeyScalable(df: DataFrame, keyCol: String, rankKey: Column,
-                           order: Seq[Column], buckets: Int = 64): DataFrame = {
-    val in = df.withColumn("__skk", rankKey.cast("long"))
-    val mm = in.agg(min(col("__skk")).as("lo"), max(col("__skk")).as("hi"),
-      count(lit(1)).as("n")).head()
-    if (mm.getLong(2) == 0L) // empty input: keep the schema, no rows
-      return df.withColumn(keyCol, lit(0L)).where(lit(false))
-    // non-empty but all-NULL rankKey: every row goes to the null bucket
-    val (lo, hi) = if (mm.isNullAt(0)) (0L, 0L)
-                   else (mm.getLong(0), mm.getLong(1))
-    require(hi - lo >= 0,
-      s"surrogateKeyScalable: rankKey range [$lo, $hi] exceeds Long.MaxValue; " +
-        "pre-bucket wide hash keys before keying")
-    val span = math.max(1L, (hi - lo) / buckets + 1)
-    // NULL __skk → bucket -1: sorts first everywhere __b is ordered, so
-    // null-key rows receive the lowest surrogate keys instead of being
-    // silently dropped by the inner join below.
-    val bucketed = in.withColumn("__b",
-      coalesce(expr(s"(__skk - ${lo}L) div ${span}L"), lit(-1L)))
-    val wLocal = Window.partitionBy("__b").orderBy(order: _*)
-    val local = bucketed.withColumn("__rn", row_number().over(wLocal).cast("long"))
-    val wOff = Window.partitionBy(lit(0)).orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    // per-bucket count read off the LOCAL window's row_number (max ==
-    // count — row_number is dense 1..n per bucket), so the offsets side
-    // shares the window's exchange instead of re-scanning the whole
-    // input lineage under a second aggregate (round-20: the old
-    // groupBy(bucketed) duplicated the input plan — for the gold dims
-    // that meant the silver join lineage computed twice per keying)
-    val offsets = local.groupBy("__b").agg(max(col("__rn")).as("__bc"))
-      .withColumn("__off", coalesce(sum(col("__bc")).over(wOff), lit(0L)))
-      .select("__b", "__off")
-    local.join(broadcast(offsets), "__b")
-      .withColumn(keyCol, col("__off") + col("__rn"))
-      .drop("__skk", "__b", "__rn", "__off")
-  }
+                           order: Seq[Column], buckets: Int = 64): DataFrame =
+    bucketedRank(df, "surrogateKeyScalable", rankKey, order, lit(1L), buckets,
+        nullsFirst = true) match {
+      case None => df.withColumn(keyCol, lit(0L)) // empty: schema kept, no rows
+      case Some(r) => r.withColumn(keyCol, col("__rank")).drop("__rank", "__n")
+    }
 }

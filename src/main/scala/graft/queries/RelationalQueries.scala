@@ -896,10 +896,10 @@ object RelationalQueries {
     // r39: the SCALABLE variant of W3's surrogate key, oracle-pinned —
     // r9 carries the reference's exact semantics (row_number over a
     // global Window: one single-partition exchange, fine for dims only);
-    // r39 produces the identical dense 1..N keys via value-bucketed
-    // local row_numbers + broadcast prefix offsets (the
-    // prefixSumScalable geometry — fully DataFrame-native, rows stay in
-    // Tungsten), the shape that survives a fact-scale input. Run over
+    // r39 produces the identical dense 1..N keys via Relational's
+    // bucketedRank core (value-bucketed local running counts + broadcast
+    // prefix offsets — fully DataFrame-native, rows stay in Tungsten),
+    // the shape that survives a fact-scale input. Run over
     // orders (10x customer) on a unique total order so both engines
     // agree key-for-key; same twin pattern as r33↔r35.
     Q("r39_surrogate_key_scalable",

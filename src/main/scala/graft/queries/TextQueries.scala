@@ -1993,8 +1993,8 @@ object TextQueries {
     // strictly inside one chunk, straddling a boundary, or spanning
     // many chunks — all three arise and all are pure prefix-sum
     // arithmetic). The running token offset is
-    // [[graft.operators.Relational.prefixSumScalable]] — bucketed
-    // local cumsums + broadcast offsets, NO single-partition global
+    // [[graft.operators.Relational.prefixSumScalable]] — the bucketedRank
+    // core's local cumsums + broadcast offsets, NO single-partition global
     // window — so the layout computes at 100 TB the same way m7's
     // byte-offset shards do; everything after the cumsum is row-local
     // integer division. Zero-token docs carry no chunk (NULL range,
@@ -2821,9 +2821,9 @@ object TextQueries {
     // assignment matches ntile(3) over (score DESC, doc_id) bit-for-bit
     // — the doc_id tiebreak makes the cut deterministic across engines
     // and cluster sizes — but is computed by Relational.ntileScalable:
-    // range-bucket on the (negated) score, per-bucket parallel
-    // row_number, broadcast bucket-count offsets, then tile by pure
-    // (rank, n) arithmetic. No single-partition window anywhere at any
+    // the bucketedRank core ranks on the (negated) score (per-bucket
+    // parallel running counts, broadcast bucket-count offsets), then
+    // the tile is pure (rank, n) arithmetic. No single-partition window anywhere at any
     // corpus size; the only global sort is over the 64-row offsets
     // frame. (Until round 13 this was a literal global ntile — one task
     // sorting one row per document, the plan's lone scale-killer.)

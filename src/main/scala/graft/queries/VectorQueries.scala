@@ -2238,10 +2238,11 @@ object VectorQueries {
     // shard its STARTING offset falls in, so shard boundaries are
     // deterministic functions of the corpus alone (no packing order
     // races). The running offset is [[Relational.prefixSumScalable]] —
-    // range-bucketed local cumsums plus a broadcast of per-bucket
-    // offsets — NOT a global single-partition window, so the layout pass
-    // itself survives 100 TB; payload bytes here are `n_chars` (ASCII
-    // corpus: chars == bytes, replayed identically by the oracle).
+    // the bucketedRank core: range-bucketed local cumsums plus a
+    // broadcast of per-bucket offsets — NOT a global single-partition
+    // window, so the layout pass itself survives 100 TB; payload bytes
+    // here are `n_chars` (ASCII corpus: chars == bytes, replayed
+    // identically by the oracle).
     Q("m7_shard_manifest",
       (s, d) => {
         val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))

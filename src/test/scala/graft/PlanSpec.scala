@@ -253,20 +253,39 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"fuzzy join degraded to all-pairs:\n${s.take(2000)}")
   }
 
-  test("prefixSumScalable: data-side window is bucket-partitioned, global window only on the offsets frame") {
+  test("scalable rank operators: bucket-partitioned data window, none under the broadcast") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
     import org.apache.spark.sql.execution.window.WindowExec
+    import graft.operators.Relational
     import spark.implicits._
     val df = (1L to 10000L).map(i => (i, i % 7)).toDF("id", "v")
-    val plan = executed(
-      graft.operators.Relational.prefixSumScalable(df, "id", "v", "cum", buckets = 16))
-    val wins = collect(plan) { case w: WindowExec => w }
-    assert(wins.exists(_.partitionSpec.nonEmpty),
-      s"data-side cumsum must partition by the range bucket:\n${plan.toString.take(2000)}")
-    // a naive rewrite (global Window.orderBy over the data) would make
-    // EVERY window global; exactly one global window — over the 16-row
-    // per-bucket offsets frame — is the designed shape
-    assert(wins.count(_.partitionSpec.isEmpty) <= 1,
-      s"more than one global window:\n${plan.toString.take(2000)}")
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "prefixSumScalable" -> (Relational.prefixSumScalable(_, "id", "v", "out", buckets = 16)),
+      "ntileScalable" -> (Relational.ntileScalable(_, 3, col("id"), Seq(col("id")), "out",
+        buckets = 16)),
+      "surrogateKeyScalable" -> (Relational.surrogateKeyScalable(_, "out", col("id"),
+        Seq(col("id")), buckets = 16)))
+    def onBucket(w: WindowExec) = w.partitionSpec.exists(_.references.exists(_.name == "__b"))
+    for ((name, f) <- ops) {
+      val plan = executed(f(df))
+      val wins = collect(plan) { case w: WindowExec => w }
+      assert(wins.exists(onBucket),
+        s"$name: the data-side window must partition by the range bucket:\n${plan.toString.take(2000)}")
+      // a naive rewrite (global Window.orderBy over the data) would make
+      // EVERY window global; exactly one global window — over the 16-row
+      // per-bucket offsets frame — is the designed shape
+      assert(wins.count(_.partitionSpec.isEmpty) <= 1,
+        s"$name: more than one global window:\n${plan.toString.take(2000)}")
+      // the offsets are aggregated from the bucketed input: reading them
+      // off the data-side window replays its sort and window under the
+      // broadcast (no plan reuses that exchange)
+      val bcasts = collect(plan) { case b: BroadcastExchangeLike => b }
+      assert(bcasts.size == 1, s"$name: expected one offsets broadcast:\n${plan.toString.take(2000)}")
+      val replayed = bcasts.flatMap(b => collect(b) { case w: WindowExec if onBucket(w) => w })
+      assert(replayed.isEmpty,
+        s"$name: data-side window under the offsets broadcast:\n${plan.toString.take(3000)}")
+    }
   }
 
   test("t35: no single-partition window over the per-document frame") {
@@ -274,7 +293,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // round 13 replaced the literal ntile(3).over(Window.orderBy(...))
     // — one task sorting one row per document — with ntileScalable;
     // the surviving global windows must sit ONLY on the 64-row offsets
-    // frame (recognizable by its __bc count column), never on a frame
+    // frame (recognizable by its __bt total column), never on a frame
     // carrying doc_id
     val t35 = graft.queries.TextQueries.all.find(_.name == "t35_quality_buckets").get
     val plan = executed(t35.run(spark, sf001))
@@ -284,7 +303,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(globalOnData.isEmpty,
       s"t35 still has a single-partition window over documents:\n${plan.toString.take(2000)}")
     assert(wins.exists(_.partitionSpec.nonEmpty),
-      "t35's per-bucket row_number window is missing — rewrite drifted")
+      "t35's per-bucket running-count window is missing — rewrite drifted")
     // the gram stream must NOT be hash-exchanged whole: t35's only
     // shuffles are map-side-combined aggregates and the ntile offsets —
     // no exchange keyed by (doc_id, w1, w2) (the measured-slower shared

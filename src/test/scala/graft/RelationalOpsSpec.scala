@@ -86,6 +86,46 @@ class RelationalOpsSpec extends SparkSpec {
     assert(empty.count() == 0L && empty.columns.contains("sk"))
   }
 
+  test("scalable rank operators on {empty, some NULL, all NULL} keys") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.LongType
+    // prefix sum and ntile reject NULL keys loudly (a NULL bucket used
+    // to be dropped by the offsets join, or the all-NULL input returned
+    // NULL columns); the surrogate key ranks NULL keys first
+    val ops: Seq[(String, DataFrame => DataFrame, Boolean)] = Seq(
+      ("prefix", Relational.prefixSumScalable(_, "v", "n", "out", buckets = 3), true),
+      ("ntile", Relational.ntileScalable(_, 2, col("v"),
+        Seq(col("v").asc_nulls_first, col("tag").asc), "out", buckets = 3), true),
+      ("surrogate", Relational.surrogateKeyScalable(_, "out", col("v"),
+        Seq(col("v").asc_nulls_first, col("tag").asc), buckets = 3), false))
+    val some = Seq[(java.lang.Long, Long, String)](
+      (30L, 1L, "c"), (null, 2L, "x"), (10L, 3L, "a"), (null, 4L, "y"), (20L, 5L, "b"))
+      .toDF("v", "n", "tag").repartition(3)
+    val allNull = some.withColumn("v", lit(null).cast("long"))
+    val inputs = Seq(("empty", some.where(lit(false))), ("some NULL", some), ("all NULL", allNull))
+    val surrogateTags = Map("some NULL" -> Seq("x", "y", "a", "b", "c"),
+      "all NULL" -> Seq("a", "b", "c", "x", "y"))
+    for ((op, f, rejects) <- ops; (input, df) <- inputs) {
+      val clue = s"$op on $input"
+      if (input == "empty") {
+        val out = f(df)
+        assert(out.count() == 0L, clue)
+        assert(out.schema("out").dataType == LongType, clue)
+        // the empty schemas are pinned: NULL-valued for prefix/ntile, 0L for the key
+        assert(out.schema("out").nullable == rejects, clue)
+      } else if (rejects) {
+        val e = intercept[IllegalArgumentException](f(df).collect())
+        val nulls = df.filter(col("v").isNull).count()
+        assert(e.getMessage.contains(s"has $nulls NULL values"), s"$clue: ${e.getMessage}")
+      } else {
+        val out = f(df)
+        assert(out.select("out").as[Long].collect().sorted.toSeq == (1L to 5L), clue)
+        assert(out.orderBy("out").select("tag").as[String].collect().toSeq ==
+          surrogateTags(input), clue)
+      }
+    }
+  }
+
   test("asofJoin: greatest right time <= left time, ties inclusive, unmatched null") {
     val left = Seq((1, 10L, "a"), (1, 20L, "b"), (1, 5L, "c"), (2, 50L, "d"))
       .toDF("k", "lt", "tag")
