@@ -49,7 +49,7 @@ case class BloomMightContainLong(child: Expression, bloomBytes: Array[Byte])
   * bitset OR, so construction is order-independent and deterministic
   * given (expectedItems, fpp). Grouped by `_metadata.file_path` this
   * builds a per-FILE bloom MANIFEST in one scan (the Delta/Iceberg
-  * bloom-index shape — see [[graft.operators.Scale.bloomManifest]]),
+  * bloom-index shape — see [[graft.operators.Scale.bloomManifestPaths]]),
   * where the driver-loop alternative would cost one filtered scan per
   * file. Emits the serialized filter bytes; nulls are ignored (a null
   * key is never probed).

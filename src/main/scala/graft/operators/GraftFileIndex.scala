@@ -18,13 +18,14 @@ import org.apache.spark.util.sketch.BloomFilter
   * own scan machinery (the relation stays V1 parquet: vectorized reads,
   * parquet row-group pushdown, and whole-stage codegen all intact).
   *
-  * Pruning is CONSERVATIVE-EXACT, the same contract as
-  * [[Scale.readZonePruned]]/[[Scale.readBloomPruned]]: a file is skipped
-  * only when a manifest PROVES no row can match (zone misses the range /
-  * Bloom says definitely-absent); any predicate shape the interpreter
-  * doesn't recognize keeps the file. String zones compare unsigned UTF-8
-  * bytes — UTF8String's own binary order — never UTF-16 `String`
-  * compareTo (the round-14 readZonePrunedStr lesson).
+  * Pruning is CONSERVATIVE-EXACT: a file is skipped only when a
+  * manifest PROVES no row can match (zone misses the range / Bloom says
+  * definitely-absent); any predicate shape the interpreter doesn't
+  * recognize keeps the file, and Spark re-applies the exact predicate to
+  * the survivors. String zones compare unsigned UTF-8 bytes —
+  * UTF8String's own binary order, the order the manifest's min/max and
+  * the residual filter use — never UTF-16 `String` compareTo, which
+  * disagrees for supplementary code points vs U+E000–U+FFFF.
   *
   * All maps are keyed by the file's URI path component; manifests are
   * file-count-sized, exactly like every manifest in [[Scale]].

@@ -5,18 +5,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
 
-/** ONE self-pruning read path over the [[Scale]] table protocols — the
-  * round-16 unification: until now zone maps (`readZonePruned`), z-order
-  * boxes (`readBoxPruned`), Bloom manifests (`readBloomPruned`), MoR
-  * deletes (`readMergeOnRead`) and snapshot resolution (`readSnapshot`)
-  * were separate opt-in library calls, so a reader who forgot the right
-  * entry point silently paid a full scan. `GraftTable.read(spark, path)`
-  * resolves the committed generation from the table's pointer, applies
-  * equality deletes, and — through [[GraftFileIndex]] — prunes files from
-  * whatever predicates Catalyst pushes down, AT SCAN PLANNING, with no
-  * explicit prune call. The skipping that used to depend on the caller
-  * remembering it is now behavior of the scan itself (the Delta/Iceberg
-  * reading contract).
+/** ONE self-pruning read path over the [[Scale]] table protocols, and
+  * the only file-skipping read in the library: zone maps, z-order boxes
+  * and Bloom manifests are all consulted here, so no reader has to
+  * remember an opt-in prune call to avoid a full scan.
+  * `GraftTable.read(spark, path)` resolves the committed generation from
+  * the table's pointer, applies equality deletes, and — through
+  * [[GraftFileIndex]] — prunes files from whatever predicates Catalyst
+  * pushes down, AT SCAN PLANNING, with no explicit prune call. Skipping
+  * is behavior of the scan itself (the Delta/Iceberg reading contract);
+  * [[scanFiles]] reads the scan's own files-read metric back so callers
+  * can assert it.
   *
   * Layouts understood, auto-detected from the table's metadata:
   *  - snapshot tables (`v=N` dirs + `_latest` pointer, [[Scale.writeSnapshot]])
@@ -28,9 +27,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   * by the immutable generation dir they describe, so a new base/snapshot
   * simply has no index until [[buildIndex]] runs again — stale-manifest
   * wrong-pruning is structurally impossible, and reads additionally
-  * validate the manifest's file set against the live listing (the
-  * [[Scale.readBloomPruned]] freshness discipline) in case a caller
-  * rewrote files in place.
+  * validate the manifest's file set against the live listing and fail
+  * loudly on drift, in case a caller rewrote files in place.
   */
 object GraftTable {
 
@@ -116,8 +114,8 @@ object GraftTable {
     * sized from the actual rows-per-file so fpp holds at any scale.
     * Multi-column z-order layouts need no special manifest: a zone entry
     * per dimension IS the per-file bounding box, and conjunctive
-    * predicates prune on each axis independently (readBoxPruned's
-    * semantics, compositionally).
+    * predicates prune on each axis independently: a file is read only
+    * when its rectangle intersects the query box on every dimension.
     *
     * `morKey` names the base column equality deletes apply to
     * (merge-on-read tables only); it is recorded in `_graft_key` so the

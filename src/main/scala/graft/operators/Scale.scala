@@ -269,12 +269,6 @@ object Scale {
       .reduce(_ + _)
   }
 
-  /** 2-column Morton interleave (the common case; same bit layout as
-    * [[zValueN]] of the pair).
-    */
-  def zValue(x: Column, y: Column, bits: Int = 16): Column =
-    zValueN(Seq(x, y), bits)
-
   /** Rewrite a DataFrame into `numFiles` Z-ordered output slices:
     * range-partition on the interleaved value, sort within partitions so
     * every file covers a tight hyper-rectangle across ALL `cols`.
@@ -661,20 +655,17 @@ object Scale {
         count(lit(1)).as("n_rows"))
 
   /** Per-file BLOOM manifest — the point-lookup complement of
-    * [[zoneMap]]'s min/max: one scan groups by `_metadata.file_path`
-    * and folds `keyCol` into a fixed-geometry Bloom filter per file
-    * (the Delta/Iceberg bloom-index shape). Zone maps prune RANGES on
-    * clustered columns; blooms prune EXACT keys on columns the layout
-    * did NOT cluster — where every file's min/max spans the whole
-    * domain and min/max skipping is useless. Returns
-    * (file, bloom bytes, n_rows); file-count-sized like every manifest
-    * here.
+    * [[zoneMap]]'s min/max: one scan over a (possibly multi-dir)
+    * generation groups by `_metadata.file_path` and folds `keyCol` into
+    * a fixed-geometry Bloom filter per file (the Delta/Iceberg
+    * bloom-index shape). Zone maps prune RANGES on clustered columns;
+    * blooms prune EXACT keys on columns the layout did NOT cluster —
+    * where every file's min/max spans the whole domain and min/max
+    * skipping is useless. Returns (file, bloom bytes, n_rows);
+    * file-count-sized like every manifest here.
+    * [[GraftTable.buildIndex]] persists it and [[GraftTable.read]]
+    * probes it against pushed-down IN-lists.
     */
-  def bloomManifest(spark: SparkSession, path: String, keyCol: String,
-                    expectedPerFile: Long, fpp: Double): DataFrame =
-    bloomManifestPaths(spark, Seq(path), keyCol, expectedPerFile, fpp)
-
-  /** [[bloomManifest]] over a multi-dir generation — see [[zoneMapPaths]]. */
   def bloomManifestPaths(spark: SparkSession, paths: Seq[String], keyCol: String,
                          expectedPerFile: Long, fpp: Double): DataFrame =
     spark.read.parquet(paths: _*)
@@ -683,146 +674,6 @@ object Scale {
       .agg(graft.functions.native.bloomBuild(col(keyCol), expectedPerFile, fpp)
           .as("bloom"),
         count(lit(1)).as("n_rows"))
-
-  /** Bloom-pruned point-lookup read: keep only files whose bloom says
-    * at least one probe key MIGHT be present (a bloom "no" is proof of
-    * absence, so pruning is conservative-exact; false positives only
-    * cost an extra file read), then re-apply the exact IN-list to the
-    * survivors. The manifest is collected driver-side (file-count
-    * bounded, the [[readZonePruned]] contract) and each file's filter
-    * is probed with every key — keys.length × files bitset probes.
-    * Returns (pruned frame, files read, files total).
-    *
-    * FRESHNESS CONTRACT (same as [[readZonePruned]]): the manifest must
-    * describe the table's CURRENT files. A rewrite/compaction that
-    * reuses paths would otherwise let a stale manifest silently skip
-    * files that now contain probe keys, so this read validates the
-    * manifest's file set against the live listing and fails loudly on
-    * any drift — rebuild the manifest ([[bloomManifest]]) after any
-    * layout change.
-    */
-  def readBloomPruned(spark: SparkSession, path: String, manifest: DataFrame,
-                      keyCol: String, keys: Seq[Long]): (DataFrame, Int, Int) = {
-    require(keys.nonEmpty, "readBloomPruned needs at least one probe key")
-    val entries = manifest.select(col("file"), col("bloom")).collect()
-    val live = {
-      import org.apache.hadoop.fs.Path
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).filter(st => st.isFile &&
-          st.getPath.getName.endsWith(".parquet") &&
-          !st.getPath.getName.startsWith("."))
-        .map(_.getPath.toUri.getPath).toSet
-    }
-    val listed = entries.map(r => new java.net.URI(r.getString(0)).getPath).toSet
-    require(listed == live,
-      s"stale bloom manifest for $path: manifest lists ${listed.size} files, " +
-        s"live table has ${live.size} — rebuild the manifest after " +
-        "rewrite/compaction (paths may be reused with different contents)")
-    val keep = entries.collect {
-      case r if !r.isNullAt(1) && {
-        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        keys.exists(bf.mightContainLong)
-      } => r.getString(0)
-    }
-    val base =
-      if (keep.isEmpty) spark.read.parquet(path).filter(lit(false))
-      else spark.read.parquet(keep.toIndexedSeq: _*)
-    (base.filter(col(keyCol).isin(keys: _*)), keep.length, entries.length)
-  }
-
-  /** Zone-pruned range read: keep only files whose [min_v, max_v] zone
-    * intersects [lo, hi] (collected from the manifest — bounded by file
-    * count, the same driver-side-list contract as [[compactParquet]]),
-    * then re-apply the exact predicate to the survivors. Correct for ANY
-    * manifest (pruning is conservative: a file is skipped only when its
-    * whole zone misses the range); FAST when the layout clusters
-    * `valueCol`. Returns the pruned frame plus (files read, files total)
-    * so callers — and the gate's specs — can assert skipping actually
-    * happened instead of trusting it.
-    */
-  def readZonePruned(spark: SparkSession, path: String, manifest: DataFrame,
-                     valueCol: String, lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val zones = manifest.select(col("file"), col("min_v").cast("long"),
-      col("max_v").cast("long")).collect()
-    val keep = zones.collect {
-      case r if !r.isNullAt(1) && !r.isNullAt(2)
-        && r.getLong(2) >= lo && r.getLong(1) <= hi => r.getString(0)
-    }
-    val base =
-      if (keep.isEmpty)
-        spark.read.parquet(path).filter(lit(false))
-      else spark.read.parquet(keep.toIndexedSeq: _*)
-    (base.filter(col(valueCol) >= lo && col(valueCol) <= hi),
-      keep.length, zones.length)
-  }
-
-  /** String twin of [[readZonePruned]]: zones and bounds compare
-    * LEXICOGRAPHICALLY (parquet's BINARY min/max stats semantics —
-    * what dictionary-range skipping on a category/tenant/date-string
-    * column actually does). Same conservative contract: a file is
-    * skipped only when its whole [min, max] range misses [lo, hi]; the
-    * residual predicate re-applies exactly.
-    */
-  def readZonePrunedStr(spark: SparkSession, path: String, manifest: DataFrame,
-                        valueCol: String, lo: String, hi: String)
-      : (DataFrame, Int, Int) = {
-    // Pruning decisions must use the SAME total order as the manifest
-    // min/max aggregation and the residual Spark filter — UTF-8 binary
-    // (UTF8String compares bytes). JVM String >= is UTF-16 code-unit
-    // order, which disagrees for supplementary code points vs
-    // U+E000–U+FFFF, so comparing on getBytes(UTF_8) keeps the
-    // "skip only when the whole zone misses" contract conservative.
-    def u8le(a: String, b: String): Boolean =
-      java.util.Arrays.compareUnsigned(
-        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) <= 0
-    val zones = manifest.select(col("file"), col("min_v").cast("string"),
-      col("max_v").cast("string")).collect()
-    val keep = zones.collect {
-      case r if !r.isNullAt(1) && !r.isNullAt(2)
-        && u8le(lo, r.getString(2)) && u8le(r.getString(1), hi) => r.getString(0)
-    }
-    val base =
-      if (keep.isEmpty)
-        spark.read.parquet(path).filter(lit(false))
-      else spark.read.parquet(keep.toIndexedSeq: _*)
-    (base.filter(col(valueCol) >= lo && col(valueCol) <= hi),
-      keep.length, zones.length)
-  }
-
-  /** 2-D box-pruned read over a Z-ORDERED layout — the multi-dimension
-    * companion of [[readZonePruned]]: the manifest carries per-file
-    * min/max of BOTH clustered columns (`file, min_a, max_a, min_b,
-    * max_b`), and a file is read only when its rectangle intersects the
-    * query box on EVERY dimension — which only pays off when the layout
-    * clustered both, i.e. after [[zOrderBy]]; a single-column layout
-    * leaves one dimension's per-file span full-width and that
-    * dimension prunes nothing. Conservative like the 1-D form (skip
-    * only when a whole side misses), exact after the residual filter;
-    * returns (pruned frame, files read, files total) so skipping is
-    * assertable. Manifest is file-count-sized — the same driver-list
-    * contract as every manifest here.
-    */
-  def readBoxPruned(spark: SparkSession, path: String, manifest: DataFrame,
-                    colA: String, loA: Long, hiA: Long,
-                    colB: String, loB: Long, hiB: Long): (DataFrame, Int, Int) = {
-    val zones = manifest.select(col("file"),
-      col("min_a").cast("long"), col("max_a").cast("long"),
-      col("min_b").cast("long"), col("max_b").cast("long")).collect()
-    val keep = zones.collect {
-      case r if !(1 to 4).exists(r.isNullAt)
-        && r.getLong(2) >= loA && r.getLong(1) <= hiA
-        && r.getLong(4) >= loB && r.getLong(3) <= hiB => r.getString(0)
-    }
-    val base =
-      if (keep.isEmpty) spark.read.parquet(path).filter(lit(false))
-      else spark.read.parquet(keep.toIndexedSeq: _*)
-    (base.filter(col(colA) >= loA && col(colA) <= hiA &&
-        col(colB) >= loB && col(colB) <= hiB),
-      keep.length, zones.length)
-  }
 
   /** SNAPSHOT-VERSIONED TABLE — the copy-on-write half of the lakehouse
     * maintenance story ([[mergeParquet]] is the in-place half, with its

@@ -684,15 +684,14 @@ object IoQueries {
 
   /** Range-CLUSTERED layout + its file zone map, the h2 companion to h1's
     * directory layout: documents written with n_chars range-clustered
-    * across files (repartitionByRange + sorted within), and the per-file
-    * (min, max) manifest [[graft.operators.Scale.zoneMap]] computes in
-    * one scan at layout time. Memoized SESSION-FREE like
-    * [[partitionedDocs]] — the cached value is a path plus plain manifest
-    * rows (file-count-sized data, not a session-bound plan), exactly
-    * what a lakehouse persists next to the table; queries replay the
-    * manifest without rescanning.
+    * across files (repartitionByRange + sorted within), with the per-file
+    * (min, max) zone index [[graft.operators.GraftTable.buildIndex]]
+    * persists inside the table in one scan at layout time. Memoized
+    * SESSION-FREE like [[partitionedDocs]] — the cached value is the
+    * table path; [[graft.operators.GraftTable.read]] prunes from the
+    * persisted index without rescanning.
     */
-  private val zonedCopies = new LayoutCache[(String, Array[(String, Long, Long)])]("io_zoned_docs")
+  private val zonedCopies = new LayoutCache[String]("io_zoned_docs")
 
   /** Two-commit snapshot table for r60: version 0 is "yesterday's load"
     * (documents with n_chars > 100), version 1 the full corpus — built
@@ -714,8 +713,7 @@ object IoQueries {
         out
       })
 
-  private[graft] def zonedDocs(s: SparkSession,
-                               d: String): (String, Array[(String, Long, Long)]) =
+  private[graft] def zonedDocs(s: SparkSession, d: String): String =
     zonedCopies.computeIfAbsent(
       s"$d|${Tables.fileFingerprint(s, d, "documents")}", _ => {
         val out = java.nio.file.Files
@@ -724,25 +722,18 @@ object IoQueries {
           .repartitionByRange(8, col("n_chars"))
           .sortWithinPartitions("n_chars")
           .write.mode("overwrite").parquet(out)
-        val zones = graft.operators.Scale.zoneMap(s, out, "n_chars")
-          .select(col("file"), col("min_v").cast("long"), col("max_v").cast("long"))
-          .collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        // persist the same stats as a GraftTable index so the UNIFIED
-        // read path (h2) prunes from pushed-down predicates alone
         graft.operators.GraftTable.buildIndex(s, out, zoneCols = Seq("n_chars"))
-        (out, zones)
+        out
       })
 
   /** h10's STRING-clustered layout: documents range-partitioned and
-    * sorted by `source`, with a per-file lexicographic (min, max)
-    * manifest — the string twin of [[zonedDocs]]. Built once per table
-    * fingerprint.
+    * sorted by `source`, with a per-file lexicographic (min, max) zone
+    * index — the string twin of [[zonedDocs]]. Built once per table
+    * fingerprint; returns the table path.
     */
-  private val zonedStrCopies = new LayoutCache[(String, Array[(String, String, String)])]("io_zoned_str_docs")
+  private val zonedStrCopies = new LayoutCache[String]("io_zoned_str_docs")
 
-  private[graft] def zonedDocsStr(s: SparkSession, d: String)
-      : (String, Array[(String, String, String)]) =
+  private[graft] def zonedDocsStr(s: SparkSession, d: String): String =
     zonedStrCopies.computeIfAbsent(
       s"$d|${Tables.fileFingerprint(s, d, "documents")}", _ => {
         val out = java.nio.file.Files
@@ -751,57 +742,44 @@ object IoQueries {
           .repartitionByRange(8, col("source"))
           .sortWithinPartitions("source")
           .write.mode("overwrite").parquet(out)
-        val zones = graft.operators.Scale.zoneMap(s, out, "source")
-          .select(col("file"), col("min_v").cast("string"),
-            col("max_v").cast("string"))
-          .collect()
-          .map(r => (r.getString(0), r.getString(1), r.getString(2)))
         graft.operators.GraftTable.buildIndex(s, out, zoneCols = Seq("source"))
-        (out, zones)
+        out
       })
 
   /** h11's BLOOM-INDEXED layout: documents clustered by SOURCE into 8
     * files (so doc_id SCATTERS — source ≡ doc_id % 20, every file's
     * doc_id min/max spans nearly the whole domain and min/max skipping
-    * is provably useless), with a per-file Bloom manifest over doc_id
-    * built in ONE grouped-aggregate scan
-    * ([[graft.operators.Scale.bloomManifest]]). Returns (path,
-    * manifest rows (file, bloom bytes)). Memoized per table
-    * fingerprint like [[zonedDocs]].
+    * is provably useless), with a per-file Bloom index over doc_id
+    * built in ONE grouped-aggregate scan by
+    * [[graft.operators.GraftTable.buildIndex]] (filters sized from the
+    * actual rows-per-file so fpp holds at any sf). Returns the table
+    * path; memoized per table fingerprint like [[zonedDocs]].
     */
-  private val bloomCopies = new LayoutCache[(String, Array[(String, Array[Byte])])]("io_bloom_docs")
+  private val bloomCopies = new LayoutCache[String]("io_bloom_docs")
 
-  private[graft] def bloomDocs(s: SparkSession, d: String)
-      : (String, Array[(String, Array[Byte])]) =
+  private[graft] def bloomDocs(s: SparkSession, d: String): String =
     bloomCopies.computeIfAbsent(
       s"$d|${Tables.fileFingerprint(s, d, "documents")}", _ => {
         val out = java.nio.file.Files
           .createTempDirectory(scratchParent, "bloomed_").toString
-        val docs = Tables.documents(s, d)
-        docs.repartitionByRange(8, col("source"))
+        Tables.documents(s, d)
+          .repartitionByRange(8, col("source"))
           .sortWithinPartitions("source")
           .write.mode("overwrite").parquet(out)
-        // ONE grouped-aggregate manifest build, persisted as the table's
-        // GraftTable index (filters sized from actual rows-per-file so
-        // fpp holds at any sf); the memoized entries are read back from
-        // the same index — no second manifest scan.
         graft.operators.GraftTable.buildIndex(s, out, bloomCols = Seq("doc_id"))
-        val manifest = s.read.parquet(s"$out/_index/plain/bloom_doc_id")
-          .select(col("file"), col("bloom"))
-          .collect()
-          .map(r => (r.getString(0), r.getAs[Array[Byte]](1)))
-        (out, manifest)
+        out
       })
 
   /** Z-ORDERED layout of documents on (n_chars, doc_id) for h3: the
     * real [[graft.operators.Scale.zOrderBy]] Morton rewrite into 8
-    * files, with a per-file manifest carrying min/max of BOTH
-    * dimensions — built once per table fingerprint, like [[zonedDocs]].
+    * files, indexed with one zone entry per dimension — together the
+    * per-file bounding box, so conjunctive pushed-down predicates prune
+    * each axis independently. Returns the table path; built once per
+    * table fingerprint, like [[zonedDocs]].
     */
-  private val zorderedCopies = new LayoutCache[(String, Array[(String, Long, Long, Long, Long)])]("io_zordered_docs")
+  private val zorderedCopies = new LayoutCache[String]("io_zordered_docs")
 
-  private[graft] def zorderedDocs(s: SparkSession, d: String)
-      : (String, Array[(String, Long, Long, Long, Long)]) =
+  private[graft] def zorderedDocs(s: SparkSession, d: String): String =
     zorderedCopies.computeIfAbsent(
       s"$d|${Tables.fileFingerprint(s, d, "documents")}", _ => {
         val out = java.nio.file.Files
@@ -809,22 +787,9 @@ object IoQueries {
         graft.operators.Scale
           .zOrderBy(Tables.documents(s, d), "n_chars", "doc_id", numFiles = 8)
           .write.mode("overwrite").parquet(out)
-        val zones = s.read.parquet(out)
-          .select(col("_metadata.file_path").as("file"),
-            col("n_chars"), col("doc_id"))
-          .groupBy("file")
-          .agg(min(col("n_chars")).cast("long").as("min_a"),
-            max(col("n_chars")).cast("long").as("max_a"),
-            min(col("doc_id")).cast("long").as("min_b"),
-            max(col("doc_id")).cast("long").as("max_b"))
-          .collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getLong(4)))
-        // one zone entry per dimension IS the per-file bounding box —
-        // conjunctive pushed-down predicates prune each axis independently
         graft.operators.GraftTable.buildIndex(s, out,
           zoneCols = Seq("n_chars", "doc_id"))
-        (out, zones)
+        out
       })
 
   /** Layout prewarm hooks (round-20, guide §2.6): every memoized
@@ -907,25 +872,23 @@ object IoQueries {
     // DIRECTORIES by a categorical key; h2 prunes individual FILES by a
     // numeric range, the other half of lakehouse data skipping (Delta/
     // Iceberg min-max stats). The layout clusters n_chars across files;
-    // the range query consults the memoized manifest and reads only the
-    // files whose zone intersects [450, 10000] — at any scale the read
-    // cost tracks the SELECTIVITY of the predicate, not the table size.
-    // Pruning is conservative (skip only when the whole zone misses), so
-    // the result is exact however repartitionByRange happened to cut the
-    // ranges — the oracle is the plain filter over the original table.
-    // ScaleSpec pins that files-read < files-total, so the skipping
-    // itself is asserted, not assumed.
+    // the range query's scan consults the table's persisted zone index
+    // and reads only the files whose zone intersects [450, 10000] — at
+    // any scale the read cost tracks the SELECTIVITY of the predicate,
+    // not the table size. Pruning is conservative (skip only when the
+    // whole zone misses), so the result is exact however
+    // repartitionByRange happened to cut the ranges — the oracle is the
+    // plain filter over the original table. PlanSpec pins that
+    // files-read < files-total on this layout (the scan's numFiles), so
+    // the skipping itself is asserted, not assumed.
     Q("h2_zonemap_skipping",
       (s, d) => {
-        // round-16 unification: the read is a PLAIN filter over
-        // GraftTable.read — file skipping happens inside the scan's own
-        // listing from the pushed-down range, no explicit prune call
-        // (readZonePruned remains the library form; ScaleSpec covers it)
-        // skipping itself is pinned on a controlled layout in
-        // GraftTableSpec ("plain filtered read prunes files"), NOT here:
-        // at an arbitrary sf every file may legitimately intersect the
-        // range, and a gate query must stay a pure correctness check
-        val (path, _) = zonedDocs(s, d)
+        // the read is a PLAIN filter over GraftTable.read — file skipping
+        // happens inside the scan's own listing from the pushed-down
+        // range, no explicit prune call. No in-band skip require: at an
+        // arbitrary sf every file may legitimately intersect the range,
+        // and a gate query must stay a pure correctness check
+        val path = zonedDocs(s, d)
         val pruned = graft.operators.GraftTable.read(s, path)
           .filter(col("n_chars").between(450L, 10000L))
         pruned.groupBy("lang")
@@ -950,9 +913,10 @@ object IoQueries {
     // files; CatalogIoSpec asserts files are actually skipped.
     Q("h10_string_zonemap",
       (s, d) => {
-        // skipping pinned in GraftTableSpec ("string zone pruning
-        // compares unsigned UTF-8"); gate query is pure correctness
-        val (path, _) = zonedDocsStr(s, d)
+        // skipping pinned in CatalogIoSpec and GraftTableSpec ("string
+        // zone pruning compares unsigned UTF-8"); gate query is pure
+        // correctness
+        val path = zonedDocsStr(s, d)
         val pruned = graft.operators.GraftTable.read(s, path)
           .filter(col("source") >= "src2" && col("source") <= "src4")
         pruned.groupBy("source")
@@ -982,11 +946,7 @@ object IoQueries {
     // and a full scan on every id fetch.
     Q("h11_bloom_skipping",
       (s, d) => {
-        val (path, entries) = bloomDocs(s, d)
-        val manifest = {
-          import s.implicits._
-          entries.toSeq.toDF("file", "bloom")
-        }
+        val path = bloomDocs(s, d)
         val keys = Seq(3L, 77L, 191L, 302L, 441L)
         // the layout's zone maps must be USELESS for this probe — pin
         // the premise, not just the conclusion
@@ -998,7 +958,6 @@ object IoQueries {
           s"h11 premise broken: min/max would already skip $zonePrunable files")
         // unified read: the IN-list is pushed down and probed against the
         // table's persisted Bloom index inside the scan's file listing
-        val _ = manifest // memoized entries kept for spec-side probes
         val pruned = graft.operators.GraftTable.read(s, path)
           .filter(col("doc_id").isin(keys: _*))
         val (read, total) = graft.operators.GraftTable.scanFiles(pruned)
@@ -1057,7 +1016,7 @@ object IoQueries {
     // surfaces must agree byte-for-byte.
     Q("h13_sql_source_read",
       (s, d) => {
-        val (path, _) = zonedDocs(s, d)
+        val path = zonedDocs(s, d)
         s.sql("CREATE OR REPLACE TEMPORARY VIEW graft_docs " +
           s"USING graft OPTIONS (path '$path')")
         val df = s.sql("""
@@ -1613,28 +1572,28 @@ object IoQueries {
     // h3: MULTI-DIMENSION (Z-ORDER) DATA SKIPPING — h2 prunes files by
     // ONE clustered column; h3 is the Delta/Iceberg liquid-layout move
     // for 2-D predicates: the layout Morton-interleaves (n_chars,
-    // doc_id) so every file covers a tight RECTANGLE, the manifest
-    // carries per-file min/max of both dimensions, and the box query
-    // reads only files whose rectangle intersects on BOTH axes — a
+    // doc_id) so every file covers a tight RECTANGLE, the table's zone
+    // index carries per-file min/max of both dimensions, and the box
+    // query reads only files whose rectangle intersects on BOTH axes — a
     // single-column layout would leave doc_id full-width in every file
     // and that axis would prune nothing. Pruning is conservative, so
     // the result is exact under any range cuts; the oracle is the
-    // plain two-predicate filter. ScaleSpec asserts the skipping (and
-    // the 3-D non-leading-dimension case) on controlled layouts.
+    // plain two-predicate filter. GraftTableSpec asserts the box
+    // skipping and ScaleSpec the 3-D non-leading-dimension case, both
+    // on controlled layouts.
     Q("h3_zorder_skipping",
       (s, d) => {
-        val (path, _) = zorderedDocs(s, d)
-        // two pushed-down ranges prune each z-order axis independently —
-        // the per-file bounding-box intersection of readBoxPruned, now as
-        // scan behavior
+        val path = zorderedDocs(s, d)
+        // two pushed-down ranges prune each z-order axis independently:
+        // the per-file bounding-box intersection, as scan behavior
         val pruned = graft.operators.GraftTable.read(s, path)
           .filter(col("n_chars").between(150L, 400L) &&
             col("doc_id").between(100L, 2600L))
         // no in-band skip require: at small sf the doc_id domain sits
         // entirely inside the probe box, so every file legitimately
-        // intersects (the old readBoxPruned read 8/8 there too); the
-        // skipping itself is pinned on controlled layouts by ScaleSpec
-        // and GraftTableSpec, and correctness never depends on pruning
+        // intersects; the skipping itself is pinned on a controlled
+        // layout by GraftTableSpec, and correctness never depends on
+        // pruning
         pruned.groupBy("lang")
           .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
             min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))

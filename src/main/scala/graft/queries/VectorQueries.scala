@@ -283,11 +283,6 @@ object VectorQueries {
   private def embeddingsFingerprint(s: org.apache.spark.sql.SparkSession, dir: String): String =
     Tables.fileFingerprint(s, dir, "embeddings")
 
-  /** [[graft.SweepV29]]'s window into the memoized coarse fit. */
-  private[graft] def ivfCentroidsSweep(s: org.apache.spark.sql.SparkSession,
-                                       dir: String, nCentroids: Int): Array[Seq[Double]] =
-    ivfCentroidsFor(s, dir, nCentroids, iters = 2)
-
   private def ivfCentroidsFor(s: org.apache.spark.sql.SparkSession, dir: String,
                               nCentroids: Int, iters: Int): Array[Seq[Double]] = {
     val fp = embeddingsFingerprint(s, dir)
@@ -3086,11 +3081,10 @@ object VectorQueries {
     */
   private[graft] def ivfPqTopK(s: org.apache.spark.sql.SparkSession,
                                d: String, nProbe: Int,
-                               topK: Int = 5,
-                               nCentroids: Int = 8): org.apache.spark.sql.DataFrame = {
+                               topK: Int = 5): org.apache.spark.sql.DataFrame = {
         import org.apache.spark.sql.expressions.Window
         val (m, subDims, kCodes) = (8, 8, 64)
-        val cents = ivfCentroidsFor(s, d, nCentroids, iters = 2)
+        val cents = ivfCentroidsFor(s, d, nCentroids = 8, iters = 2)
         val cbs = pqConvergedCodebooksFor(s, d, m, subDims, kCodes)
         val emb = preparedEmbeddings(s, d)
         def sel(mi: Int) = element_at(
@@ -3194,12 +3188,11 @@ object VectorQueries {
     */
   private[graft] def ivfPqResidualTopK(s: org.apache.spark.sql.SparkSession,
                                        d: String, nProbe: Int,
-                                       topK: Int = 5,
-                                       nCentroids: Int = 8): org.apache.spark.sql.DataFrame = {
+                                       topK: Int = 5): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (m, subDims) = (8, 8)
-    val cents = ivfCentroidsFor(s, d, nCentroids, iters = 2)
-    val rcbs = pqResidualCodebooksFor(s, d, nCentroids, coarseIters = 2,
+    val cents = ivfCentroidsFor(s, d, nCentroids = 8, iters = 2)
+    val rcbs = pqResidualCodebooksFor(s, d, nCentroids = 8, coarseIters = 2,
       m = m, subDims = subDims, k = 64)
     val emb = preparedEmbeddings(s, d)
     val ctrArr = array(scala.collection.immutable.ArraySeq.unsafeWrapArray(

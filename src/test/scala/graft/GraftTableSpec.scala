@@ -31,6 +31,35 @@ class GraftTableSpec extends SparkSpec {
     assert(read <= 2, s"zone pruning must skip files: read $read of $total")
     val got = df.select("k").as[Long].collect().sorted
     assert(got.toSeq == (100L to 400L).toSeq)
+    // a range every zone misses reads no file and returns no row
+    val empty = GraftTable.read(spark, path).filter(col("v").between(10000, 20000))
+    assert(GraftTable.scanFiles(empty) == ((0L, 8L)))
+    assert(empty.count() == 0L)
+  }
+
+  test("z-ordered layout: two zone entries prune a 2-D box") {
+    // hashed points Morton-clustered into 16 files: each file covers a
+    // tight (x, y) rectangle, so one zone entry per dimension is the
+    // per-file bounding box and a box query reads only the files whose
+    // rectangle intersects it on BOTH axes
+    val pts = (0 until 32768).map { i =>
+      val h = i.toLong * 0x9E3779B97F4A7C15L
+      (i.toLong, (h >>> 10) & 255, (h >>> 30) & 255)
+    }.toDF("id", "x", "y")
+    val path = tmp("gt_zbox")
+    Scale.zOrderBy(pts, "x", "y", numFiles = 16).write.parquet(path)
+    GraftTable.buildIndex(spark, path, zoneCols = Seq("x", "y"))
+    val box = col("x").between(32, 95) && col("y").between(160, 223)
+    val df = GraftTable.read(spark, path).filter(box)
+    val (read, total) = GraftTable.scanFiles(df)
+    assert(total == 16 && read < total, s"2-D box must skip files: read $read of $total")
+    val want = pts.filter(box).select("id").as[Long].collect().sorted
+    assert(df.select("id").as[Long].collect().sorted.toSeq == want.toSeq)
+    // a box outside the x domain reads no file and returns no row
+    val empty = GraftTable.read(spark, path)
+      .filter(col("x").between(1000, 2000) && col("y").between(0, 255))
+    assert(GraftTable.scanFiles(empty) == ((0L, 16L)))
+    assert(empty.count() == 0L)
   }
 
   test("all-NULL zone column in a file: index loads, file kept conservatively") {
@@ -90,6 +119,9 @@ class GraftTableSpec extends SparkSpec {
     val expected = spark.read.parquet(s"$path/v=0")
       .filter(col("k").isin(2L, 1338L, 3002L)).count()
     assert(probe.count() == expected)
+    // absent keys: the result is exactly empty whatever the false positives
+    val absent = GraftTable.read(spark, path).filter(col("k").isin(999999L, 888888L))
+    assert(absent.count() == 0L)
   }
 
   test("merge-on-read: deletes applied AND pruning fires beneath the anti-join") {

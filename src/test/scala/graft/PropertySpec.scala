@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import graft.silver.Transforms
-import graft.operators.{Relational, Scale}
+import graft.operators.{GraftTable, Relational, Scale}
 
 /** Property-based invariants of the cleansing semantics (SURVEY.md §5.3.4)
   * over randomly generated dirty inputs.
@@ -351,26 +351,55 @@ class PropertySpec extends SparkSpec {
   }
 
   test("zone-pruned range read == full-scan filter on random layouts and ranges") {
-    // the manifest is CONSERVATIVE by contract: whatever repartitionByRange
-    // did to the file cuts, pruning must never change the result — only
-    // the number of files read. Random values, file counts, and query
-    // ranges (including empty and all-covering ones).
+    // the zone index is CONSERVATIVE by contract: whatever
+    // repartitionByRange did to the file cuts, pruning must never change
+    // the result — only the number of files read. Random values, file
+    // counts, and query ranges (including empty and all-covering ones),
+    // on a long zone column and on a string one. The string alphabet
+    // holds supplementary code points (U+1F600, U+10000) next to
+    // U+E000–U+FFFF characters — UTF-16 and UTF-8 order those pairs
+    // differently, and zones must follow UTF-8 like Spark's comparison
+    // — plus the empty string.
+    val alphabet = Seq("", "a", "b", "\u00e9", "\ue000", "\ufffd",
+      "\ud83d\ude00", "\ud800\udc00")
+    val str = Gen.choose(0, 3).flatMap(Gen.listOfN(_, Gen.oneOf(alphabet)))
+      .map(_.mkString)
+    def u8le(a: String, b: String): Boolean =
+      java.util.Arrays.compareUnsigned(
+        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) <= 0
     val gen = Gen.zip(
-      Gen.listOfN(300, Gen.choose(-500L, 500L)),
+      Gen.listOfN(300, Gen.zip(Gen.choose(-500L, 500L), str)),
       Gen.oneOf(1, 3, 8),
-      Gen.choose(-600L, 600L), Gen.choose(0L, 400L))
-    forAll(gen, minSuccessful = 4) { case (vals, nFiles, lo, span) =>
-      val out = java.nio.file.Files.createTempDirectory("zprop").toString
-      val df = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
-      df.repartitionByRange(nFiles, col("v")).sortWithinPartitions("v")
-        .write.mode("overwrite").parquet(out)
-      val manifest = Scale.zoneMap(spark, out, "v")
-      val hi = lo + span
-      val (pruned, read, total) = Scale.readZonePruned(spark, out, manifest, "v", lo, hi)
-      val got = pruned.select("id").collect().map(_.getLong(0)).sorted.toSeq
-      val expected = vals.zipWithIndex
-        .collect { case (v, i) if v >= lo && v <= hi => i.toLong }.sorted
-      assert(got == expected, s"nFiles=$nFiles range=[$lo,$hi] read=$read/$total")
+      Gen.listOfN(4, Gen.zip(Gen.choose(-600L, 600L), Gen.choose(0L, 400L))),
+      Gen.listOfN(4, Gen.zip(str, str)))
+    forAll(gen, minSuccessful = 4) { case (rows, nFiles, longRanges, strRanges) =>
+      val df = rows.zipWithIndex.map { case ((v, t), i) => (i.toLong, v, t) }
+        .toDF("id", "v", "s")
+      // per zone column: (predicate, the same test row-side, label)
+      val ranges = Seq(
+        "v" -> longRanges.map { case (lo, span) =>
+          (col("v").between(lo, lo + span),
+            (v: Long, _: String) => v >= lo && v <= lo + span, s"[$lo,${lo + span}]")
+        },
+        "s" -> strRanges.map { case (a, b) =>
+          val (lo, hi) = if (u8le(a, b)) (a, b) else (b, a)
+          (col("s").between(lo, hi),
+            (_: Long, t: String) => u8le(lo, t) && u8le(t, hi), s"[$lo,$hi]")
+        })
+      ranges.foreach { case (zone, queries) =>
+        val out = java.nio.file.Files.createTempDirectory("zprop").toString
+        df.repartitionByRange(nFiles, col(zone)).sortWithinPartitions(zone)
+          .write.mode("overwrite").parquet(out)
+        GraftTable.buildIndex(spark, out, zoneCols = Seq(zone))
+        val table = GraftTable.read(spark, out)
+        queries.foreach { case (pred, keep, label) =>
+          val got = table.filter(pred).select("id").as[Long].collect().sorted.toSeq
+          val expected = rows.zipWithIndex
+            .collect { case ((v, t), i) if keep(v, t) => i.toLong }
+          assert(got == expected, s"zone=$zone nFiles=$nFiles range=$label")
+        }
+      }
     }
   }
 

@@ -234,31 +234,6 @@ class ScaleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(finalIds == states.last)
   }
 
-  test("bloomManifest + readBloomPruned: point lookups read only plausible files, results exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString + "/t"
-    // ids scattered across files by an unrelated clustering column, so
-    // per-file id min/max spans everything (the layout zone maps can't
-    // prune) — the bloom-index use case
-    val df = (0L until 4000L).map(i => (i, (i % 8).toString)).toDF("id", "grp")
-    df.repartitionByRange(4, col("grp")).write.parquet(dir)
-    val manifest = Scale.bloomManifest(spark, dir, "id",
-      expectedPerFile = 2048, fpp = 0.01)
-    assert(manifest.count() == 4)
-    // present keys: exact rows back, strictly fewer files than total
-    val keys = Seq(8L, 16L, 1024L)
-    val (pruned, read, total) = Scale.readBloomPruned(spark, dir, manifest, "id", keys)
-    assert(total == 4 && read < total, s"expected skipping, read $read/$total")
-    assert(pruned.select("id").collect().map(_.getLong(0)).sorted.toSeq == keys.sorted)
-    // absent keys: result is EXACTLY empty regardless of false positives
-    val (none, readAbsent, _) =
-      Scale.readBloomPruned(spark, dir, manifest, "id", Seq(999999L, 888888L))
-    assert(none.count() == 0)
-    assert(readAbsent <= total)
-    intercept[IllegalArgumentException] {
-      Scale.readBloomPruned(spark, dir, manifest, "id", Seq.empty)
-    }
-  }
-
   test("compactParquet rewrites many small files into few, content identical") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
     val df = (1 to 10000).map(i => (i.toLong, s"row$i")).toDF("id", "v")
@@ -688,35 +663,6 @@ class ScaleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(zHit <= 8, s"z-order should skip most files on a c-range predicate, hit $zHit/16")
   }
 
-  test("readBoxPruned: 2-D box skips files on a z-ordered layout, reads exactly the filter result") {
-    val n = 32768
-    val pts = (0 until n).map { i =>
-      val h = i.toLong * 0x9E3779B97F4A7C15L
-      (i.toLong, ((h >>> 10) & 255).toLong, ((h >>> 30) & 255).toLong)
-    }.toDF("id", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft_boxprune").toString
-    Scale.zOrderBy(pts, "x", "y", numFiles = 16)
-      .write.mode("overwrite").parquet(dir)
-    val manifest = spark.read.parquet(dir)
-      .select(col("_metadata.file_path").as("file"), col("x"), col("y"))
-      .groupBy("file")
-      .agg(min("x").as("min_a"), max("x").as("max_a"),
-        min("y").as("min_b"), max("y").as("max_b"))
-    val (pruned, read, total) = Scale.readBoxPruned(
-      spark, dir, manifest, "x", 32L, 95L, "y", 160L, 223L)
-    assert(total == 16, s"expected 16 files, got $total")
-    assert(read < total, s"2-D box should skip files: read $read/$total")
-    // exactness: identical row set to the plain 2-predicate filter
-    val got = pruned.select("id").collect().map(_.getLong(0)).toSet
-    val want = pts.filter(col("x").between(32, 95) && col("y").between(160, 223))
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(got == want, s"pruned read diverged: ${got.size} vs ${want.size} rows")
-    // an empty box reads nothing and returns an empty exact frame
-    val (empty, read0, _) = Scale.readBoxPruned(
-      spark, dir, manifest, "x", 1000L, 2000L, "y", 0L, 255L)
-    assert(read0 == 0 && empty.count() == 0)
-  }
-
   test("bucketed tables join without a shuffle exchange") {
     val li = spark.read.parquet(s"$sf001/lineitem.parquet")
       .select("l_orderkey", "l_quantity")
@@ -742,24 +688,6 @@ class ScaleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       spark.sql("DROP TABLE IF EXISTS li_b")
       spark.sql("DROP TABLE IF EXISTS o_b")
     }
-  }
-
-  test("zoneMap + readZonePruned: range query skips files, result exact, empty range reads none") {
-    import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("zonemap").toString
-    spark.range(0, 1000).select(col("id"), (col("id") * 3).as("v"))
-      .repartitionByRange(5, col("v")).sortWithinPartitions("v")
-      .write.mode("overwrite").parquet(out)
-    val manifest = Scale.zoneMap(spark, out, "v")
-    val total = manifest.count()
-    assert(total == 5L)
-    val (pruned, read, all) = Scale.readZonePruned(spark, out, manifest, "v", 900L, 1200L)
-    assert(all == 5 && read < all, s"expected skipping, read $read of $all")
-    val expect = spark.read.parquet(out).filter(col("v").between(900, 1200))
-    assert(pruned.agg(count(lit(1)), sum("v")).head() ==
-      expect.agg(count(lit(1)), sum("v")).head())
-    val (empty, read0, _) = Scale.readZonePruned(spark, out, manifest, "v", 10000L, 20000L)
-    assert(read0 == 0 && empty.count() == 0L)
   }
 
   test("writeSnapshotIdempotent: a redelivered token no-ops; a new token commits; interleaving with plain commits is safe") {
