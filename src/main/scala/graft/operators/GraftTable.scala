@@ -59,15 +59,8 @@ object GraftTable {
       // live row appends (commit >= fence) are part of the generation's
       // file set — the scan, the index, and the delete sequence rule all
       // see base + appends as one table
-      val apps = new Path(path, "_appends")
-      val appendDirs =
-        if (!fs.exists(apps)) Nil
-        else fs.listStatus(apps).toSeq.map(_.getPath)
-          .collect { case p if p.getName.startsWith("a=") &&
-              p.getName.stripPrefix("a=").toLong >= hwm =>
-            (p.getName.stripPrefix("a=").toLong, p.toString) }
-          .sortBy(_._1)
-      Gen(s"$path/base_v=$v", s"base_v=$v", Some((v, hwm)), appendDirs)
+      Gen(s"$path/base_v=$v", s"base_v=$v", Some((v, hwm)),
+        Scale.morDirs(fs, path, "_appends", "a=", hwm))
     } else if (fs.exists(new Path(path, "_latest")) || dirs("v=")) {
       val v = version.getOrElse(Scale.pointerOrRetry(path, "snapshot",
         () => Scale.latestSnapshot(spark, path), () => dirs("v=")))
@@ -158,15 +151,7 @@ object GraftTable {
           .write.mode(SaveMode.Overwrite).parquet(s"$idxDir/bloom_$c")
       }
     }
-    morKey.foreach { k =>
-      val tmp = new Path(path, "_graft_key.tmp")
-      val out = fs.create(tmp, true)
-      out.write(k.getBytes("UTF-8")); out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        tmp.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, new Path(path, "_graft_key"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
+    morKey.foreach(k => Scale.publishFile(spark, fs, new Path(path, "_graft_key"), k))
   }
 
   /** The skipping-index SPEC the table's manifests record — (zone
@@ -200,9 +185,13 @@ object GraftTable {
     }
   }
 
-  /** AUTO RE-INDEX — the maintenance hook [[Scale]]'s write paths call
-    * so data skipping is TABLE BEHAVIOR, not caller discipline: after a
-    * compaction, merge, or snapshot commit, the recorded spec (captured
+  /** AUTO RE-INDEX — the maintenance hook that makes data skipping
+    * TABLE BEHAVIOR, not caller discipline. Called after the commit
+    * point by [[Scale]]'s commit seam (the snapshot commit behind the
+    * three snapshot writers, the merge-on-read base commit behind
+    * `writeMorBase`/`compactDeletes`, and `appendMorRows`), by
+    * `mergeParquet` and `compactParquet`, and by the SQL `OPTIMIZE GRAFT
+    * ... REINDEX` command: the recorded spec (captured
     * by the caller BEFORE a destructive swap via [[indexSpec]], or
     * discovered here from the surviving manifests) is rebuilt for the
     * table's current generation. Never-indexed tables cost nothing.
@@ -317,13 +306,7 @@ object GraftTable {
     g.mor match {
       case Some((_, hwm)) =>
         val fs = fsFor(spark, path)
-        val dels = new Path(path, "_deletes")
-        val delDirs0 =
-          if (!fs.exists(dels)) Seq.empty[(Long, String)]
-          else fs.listStatus(dels).toSeq.map(_.getPath)
-            .collect { case p if p.getName.startsWith("d=") &&
-              p.getName.stripPrefix("d=").toLong >= hwm =>
-              (p.getName.stripPrefix("d=").toLong, p.toString) }
+        val delDirs0 = Scale.morDirs(fs, path, "_deletes", "d=", hwm)
         // appends were listed at resolve() time, deletes just now — clamp
         // to the largest contiguous commit prefix so a delete published
         // after an append this reader missed is excluded too (the view

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -86,6 +87,86 @@ object Scale {
       }
       try body finally { fs.delete(lock, false); () }
     } finally { inProcessLocks.remove(path, token); () }
+  }
+
+  // ---------------------------------------------------------------
+  // THE COMMIT SEAM — one implementation of the optimistic log-pointer
+  // commit (Delta Lake's protocol) behind every snapshot and
+  // merge-on-read write: under [[withTableLock]], write the new
+  // immutable data dir ("data"), then its side files ("token", "feed",
+  // "key"), then PUBLISH the commit point — an atomic pointer replace
+  // ([[publishFile]]) or an atomic dir rename — and only then rebuild
+  // the skipping manifests. A crash at any step before "publish" leaves
+  // uncommitted garbage that readers never see and the next commit
+  // overwrites; the step order below is the crash discipline.
+  // ---------------------------------------------------------------
+
+  /** Test seam, not an option: called with (table path, step name)
+    * right before each named commit step; a hook that throws simulates
+    * a crash there. The default does nothing.
+    */
+  @volatile private[operators] var commitHook: (String, String) => Unit = (_, _) => ()
+
+  private def step(path: String, name: String): Unit = commitHook(path, name)
+
+  private def writeSmallFile(fs: FileSystem, p: Path, body: String): Unit = {
+    val out = fs.create(p, true)
+    out.write(body.getBytes("UTF-8")); out.close()
+  }
+
+  /** ATOMIC replace of a small metadata file (a pointer, the CDF key,
+    * the column map, the MoR key): write `<name>.tmp`, then FileContext
+    * rename with OVERWRITE — not delete-then-rename, which leaves a
+    * window (and a crash point) with NO file at all, during which
+    * readers see "no committed snapshot" on a committed table and a
+    * subsequent writer would restart at v=0 over live data. With the
+    * atomic rename the file always holds the old or the new body.
+    */
+  private[operators] def publishFile(spark: SparkSession, fs: FileSystem,
+                                     dest: Path, body: String): Unit = {
+    val tmp = new Path(dest.getParent, dest.getName + ".tmp")
+    writeSmallFile(fs, tmp, body)
+    org.apache.hadoop.fs.FileContext.getFileContext(
+      tmp.toUri, spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+  }
+
+  /** The `<prefix><n>` dirs directly under `dir` as (n, path), ascending
+    * by n; empty when `dir` does not exist. The one listing behind every
+    * numbered dir of the table formats (`v=`, `base_v=`, `a=`, `d=`).
+    */
+  private[operators] def numberedDirs(fs: FileSystem, dir: Path,
+                                      prefix: String): Seq[(Long, Path)] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith(prefix) =>
+        (st.getPath.getName.stripPrefix(prefix).toLong, st.getPath)
+    }.sortBy(_._1)
+
+  /** Copy-on-write swap of one dir: park the live `to` (if any) at
+    * `to + bakSuffix`, rename `from` into place, drop the parked copy.
+    * Every rename is checked ([[renameOrFail]]), so a failed step aborts
+    * with the old or the new dir in place.
+    */
+  private def swapDir(fs: FileSystem, from: Path, to: Path, bakSuffix: String): Unit = {
+    val bak = new Path(to.toString + bakSuffix)
+    fs.delete(bak, true)
+    val existed = fs.exists(to)
+    if (existed) renameOrFail(fs, to, bak)
+    fs.mkdirs(to.getParent)
+    renameOrFail(fs, from, to)
+    if (existed) { fs.delete(bak, true); () }
+  }
+
+  /** `c IN values`, NULL included: isin() never matches NULL, so a null
+    * partition value (Hive's __HIVE_DEFAULT_PARTITION__ dir) needs its
+    * own predicate or its rows would be replaced instead of merged.
+    */
+  private def touchedPred(c: Column, values: Seq[Any]): Column = {
+    val (nulls, nonNull) = values.partition(_ == null)
+    if (nulls.isEmpty) c.isin(nonNull: _*)
+    else if (nonNull.isEmpty) c.isNull
+    else c.isin(nonNull: _*) || c.isNull
   }
 
   /** Skew-safe equi-join: salt the skewed (large) side into `salt`
@@ -426,15 +507,6 @@ object Scale {
       partitionCol.fold(w)(p => w.partitionBy(p)).parquet(src.toString)
       return
     }
-    def swap(from: Path, to: Path): Unit = {
-      val bak = new Path(to.toString + "__merge_bak")
-      fs.delete(bak, true)
-      val existed = fs.exists(to)
-      if (existed) renameOrFail(fs, to, bak)
-      fs.mkdirs(to.getParent)
-      renameOrFail(fs, from, to)
-      if (existed) { fs.delete(bak, true); () }
-    }
     partitionCol match {
       case None =>
         val merged = merge(spark.read.parquet(path))
@@ -450,28 +522,19 @@ object Scale {
               .sortWithinPartitions(clusterCols.map(col): _*)
           }
         shaped.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        swap(tmp, src)
-        GraftTable.reindexAuto(spark, path, idxSpec)
+        swapDir(fs, tmp, src, "__merge_bak")
       case Some(p) =>
         val touched = updates.select(col(p)).distinct().collect().map(_.get(0))
         require(touched.nonEmpty, "mergeParquet: updates are empty")
-        // partition pruning confines the base read to the touched slice;
-        // isin() never matches NULL, so a null partition value (Hive's
-        // __HIVE_DEFAULT_PARTITION__ dir) needs its own predicate or its
-        // existing rows would be replaced instead of merged
-        val (nullTouched, nonNull) = touched.toIndexedSeq.partition(_ == null)
-        val touchedPred =
-          if (nullTouched.isEmpty) col(p).isin(nonNull: _*)
-          else if (nonNull.isEmpty) col(p).isNull
-          else col(p).isin(nonNull: _*) || col(p).isNull
-        val base = spark.read.parquet(path).filter(touchedPred)
+        // partition pruning confines the base read to the touched slice
+        val base = spark.read.parquet(path).filter(touchedPred(col(p), touched.toIndexedSeq))
         val merged = merge(base)
         merged.write.mode(SaveMode.Overwrite).partitionBy(p).parquet(tmp.toString)
         // the write above fully materialized tmp; now swap ONLY the
         // touched leaf dirs (new partition values simply rename in)
         val written = fs.listStatus(tmp)
           .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$p="))
-        written.foreach(s => swap(s.getPath, new Path(src, s.getPath.getName)))
+        written.foreach(s => swapDir(fs, s.getPath, new Path(src, s.getPath.getName), "__merge_bak"))
         // a partition whose every key was tombstoned produces NO leaf in
         // tmp — remove its live dir entirely (value→dir name via Spark's
         // own Hive-escaping; null maps to __HIVE_DEFAULT_PARTITION__).
@@ -487,11 +550,11 @@ object Scale {
           }
         }
         fs.delete(tmp, true)
-        // leaf swaps changed the data listing under an unchanged index
-        // dir — rebuild or the next indexed read fails the staleness
-        // check (loud, but maintenance shouldn't require caller repair)
-        GraftTable.reindexAuto(spark, path, idxSpec)
     }
+    // swaps changed the data listing under an unchanged index dir —
+    // rebuild or the next indexed read fails the staleness check (loud,
+    // but maintenance shouldn't require caller repair)
+    GraftTable.reindexAuto(spark, path, idxSpec)
   }
 
   /** OPTIMIZE-style compaction: rewrite a parquet directory into
@@ -609,11 +672,7 @@ object Scale {
         }
         Await.result(Future.sequence(jobs), Duration.Inf)
       } finally { pool.shutdown(); () }
-      val bak = new Path(path + "__compact_bak")
-      fs.delete(bak, true)
-      renameOrFail(fs, src, bak)
-      renameOrFail(fs, tmp, src)
-      fs.delete(bak, true)
+      swapDir(fs, tmp, src, "__compact_bak")
       // skipping survives maintenance without caller discipline: rebuild
       // the captured spec over the compacted layout
       GraftTable.reindexAuto(spark, path, idxSpec)
@@ -690,59 +749,104 @@ object Scale {
     * version fail loudly on file-not-found, Delta's contract).
     */
   def writeSnapshot(spark: SparkSession, path: String, df0: DataFrame,
-                    expectedVersion: Option[Long] = None): Long = {
-    import org.apache.hadoop.fs.Path
+                    expectedVersion: Option[Long] = None): Long =
+    commitSnapshot(spark, path, df0, expectedVersion, Plain).get
+
+  /** What a snapshot commit records beside its data dir: nothing, an
+    * idempotence token, or a change feed keyed by a (logical) column —
+    * one of the three, never a mix.
+    */
+  private sealed trait SnapshotKind
+  private case object Plain extends SnapshotKind
+  private final case class Idempotent(token: String) extends SnapshotKind {
+    require(token.nonEmpty, "idempotence token must be non-empty")
+  }
+  private final case class Cdf(keyCol: String) extends SnapshotKind
+
+  /** The ONE snapshot commit behind [[writeSnapshot]],
+    * [[writeSnapshotIdempotent]] and [[writeSnapshotCdf]]. Under the
+    * table lock, in this order (the crash discipline):
+    *
+    *  1. resolve the latest version; for [[Idempotent]], a latest
+    *     version already carrying the token is OUR redelivery — None,
+    *     decided BEFORE the CAS (a version advance is not a conflict);
+    *  2. writer-writer optimistic concurrency: with `expectedVersion`
+    *     set, a commit whose base read was superseded fails loudly
+    *     ([[CommitConflictException]]'s retry contract) instead of
+    *     silently last-write-winning over the interleaved commit;
+    *  3. "data": write `v=<next>` in physical column names (callers
+    *     speak logical ones). Overwrite, not ErrorIfExists: a dir at
+    *     `next` can only be a CRASHED writer's leftovers (the pointer
+    *     never moved past it, and live writers serialize under the
+    *     lock) — uncommitted garbage by protocol, which a new commit
+    *     must replace rather than be permanently blocked by;
+    *  4. "token" ([[Idempotent]]): `v=<next>/_token`, so a crash between
+    *     data and pointer never leaves a committed version missing it;
+    *  5. "feed": [[Cdf]] writes `_cdf/v=<next>` off the WRITTEN data
+    *     bytes; every other kind deletes an orphan `_cdf/v=<next>` a
+    *     crashed CDF writer left — a `_cdf/v=<n>` dir must only ever
+    *     exist for a version a CDF commit published, or
+    *     readChangesBetween would serve it as describing THIS commit;
+    *  6. "key" ([[Cdf]]): publish the physical key to `_cdf_key`;
+    *  7. "publish": the atomic `_latest` swap — THE commit point;
+    *  8. a previously indexed table's new version inherits the spec
+    *     (discovered from the surviving `v=<prev>` manifests; no-op on
+    *     never-indexed tables).
+    *
+    * A crash anywhere before 7 leaves an above-pointer dir (and maybe
+    * feed) that readers never see, the next commit overwrites, and
+    * [[vacuumSnapshots]] sweeps. Returns None only on an
+    * [[Idempotent]] redelivery.
+    */
+  private def commitSnapshot(spark: SparkSession, path: String, df0: DataFrame,
+                             expectedVersion: Option[Long],
+                             kind: SnapshotKind): Option[Long] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new Path(path))
     withTableLock(fs, path) {
       val latest = latestSnapshot(spark, path)
-      // writer-writer optimistic concurrency: with expectedVersion set,
-      // a commit whose base read was superseded fails loudly
-      // ([[CommitConflictException]]'s retry contract) instead of
-      // silently last-write-winning over the interleaved commit
-      casCheck(path, "snapshot", expectedVersion, latest.getOrElse(-1L))
-      val next = latest.map(_ + 1).getOrElse(0L)
-      // callers speak logical names; storage keeps physical ones
-      val df = toPhysicalCols(df0, snapshotColMap(spark, path))
-      // Overwrite, not ErrorIfExists: a dir at `next` can only be a
-      // CRASHED writer's leftovers (the pointer never moved past it, and
-      // live writers serialize under the lock) — uncommitted garbage by
-      // protocol, which a new commit must replace rather than be
-      // permanently blocked by. vacuumSnapshots sweeps such dirs too.
-      df.write.mode(SaveMode.Overwrite).parquet(s"$path/v=$next")
-      // A crashed writeSnapshotCdf leaves an orphan `_cdf/v=$next` (the
-      // feed is written before its pointer swap); committing this PLAIN
-      // version over it would leave a stale feed that readChangesBetween
-      // later serves as if it described THIS commit. A `_cdf/v=<n>` dir
-      // must only ever exist for a version writeSnapshotCdf committed.
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_cdf/v=$next"), true)
-      swapLatestPointer(spark, fs, path, next)
-      // previously indexed table: the new version inherits the spec
-      // (discovered from the surviving v=<prev> manifests; no-op on
-      // never-indexed tables)
-      GraftTable.reindexAuto(spark, path)
-      next
+      val redelivery = kind match {
+        case Idempotent(token) => latest.exists { v =>
+          val tp = new Path(s"$path/v=$v/_token")
+          fs.exists(tp) && readPointerFully(fs, tp) == token
+        }
+        case _ => false
+      }
+      if (redelivery) None
+      else {
+        casCheck(path, "snapshot", expectedVersion, latest.getOrElse(-1L))
+        val next = latest.map(_ + 1).getOrElse(0L)
+        val cmap = snapshotColMap(spark, path)
+        step(path, "data")
+        toPhysicalCols(df0, cmap).write.mode(SaveMode.Overwrite).parquet(s"$path/v=$next")
+        kind match {
+          case Idempotent(token) =>
+            step(path, "token")
+            writeSmallFile(fs, new Path(s"$path/v=$next/_token"), token)
+          case _ =>
+        }
+        step(path, "feed")
+        kind match {
+          case Cdf(keyCol0) =>
+            // the diff, the feed, and the data dirs all live in physical names
+            val keyCol = cmap.map(_.swap).getOrElse(keyCol0, keyCol0)
+            writeChangeFeed(spark, path, latest, next, keyCol)
+            // record the PHYSICAL key name so argument-free consumers (SQL
+            // DML routing through this commit protocol) can keep the feed
+            // lineage going; last writer wins — the key is a per-commit
+            // argument, this is just its latest value
+            step(path, "key")
+            val kp = new Path(path, "_cdf_key")
+            if (!fs.exists(kp) || readPointerFully(fs, kp) != keyCol)
+              publishFile(spark, fs, kp, keyCol)
+          case _ => fs.delete(new Path(s"$path/_cdf/v=$next"), true)
+        }
+        step(path, "publish")
+        publishFile(spark, fs, new Path(path, "_latest"), next.toString)
+        GraftTable.reindexAuto(spark, path)
+        Some(next)
+      }
     }
-  }
-
-  /** ATOMIC pointer replace (FileContext rename with OVERWRITE), not
-    * delete-then-rename: the latter leaves a window — and a crash
-    * point — with NO pointer at all, during which readers see "no
-    * committed snapshot" on a committed table and a subsequent writer
-    * would restart at v=0 over live data. With the atomic rename the
-    * pointer always resolves to the old or the new version.
-    */
-  private def swapLatestPointer(spark: SparkSession,
-                                fs: org.apache.hadoop.fs.FileSystem,
-                                path: String, next: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(path, "_latest.tmp")
-    val out = fs.create(tmp, true)
-    out.write(next.toString.getBytes("UTF-8")); out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      tmp.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new Path(path, "_latest"),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Idempotent snapshot commit — the EXACTLY-ONCE sink primitive for
@@ -761,34 +865,8 @@ object Scale {
     */
   def writeSnapshotIdempotent(spark: SparkSession, path: String, df0: DataFrame,
                               token: String,
-                              expectedVersion: Option[Long] = None): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    require(token.nonEmpty, "idempotence token must be non-empty")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(path))
-    withTableLock(fs, path) {
-      val latest = latestSnapshot(spark, path)
-      val already = latest.exists { v =>
-        val tp = new Path(s"$path/v=$v/_token")
-        fs.exists(tp) && readPointerFully(fs, tp) == token
-      }
-      if (already) None // OUR redelivery — a version advance is not a conflict
-      else {
-        casCheck(path, "snapshot", expectedVersion, latest.getOrElse(-1L))
-        val next = latest.map(_ + 1).getOrElse(0L)
-        val df = toPhysicalCols(df0, snapshotColMap(spark, path))
-        df.write.mode(SaveMode.Overwrite).parquet(s"$path/v=$next")
-        val tok = fs.create(new Path(s"$path/v=$next/_token"), true)
-        tok.write(token.getBytes("UTF-8")); tok.close()
-        // same orphan-feed discipline as writeSnapshot: a crashed CDF
-        // writer's `_cdf/v=$next` must not survive a plain commit of $next
-        fs.delete(new Path(s"$path/_cdf/v=$next"), true)
-        swapLatestPointer(spark, fs, path, next)
-        GraftTable.reindexAuto(spark, path) // inherit spec (see writeSnapshot)
-        Some(next)
-      }
-    }
-  }
+                              expectedVersion: Option[Long] = None): Option[Long] =
+    commitSnapshot(spark, path, df0, expectedVersion, Idempotent(token))
 
   /** [[writeSnapshot]] with a CHANGE-DATA-FEED commit (the Delta CDF
     * contract): alongside the new version's data, the commit records the
@@ -811,125 +889,107 @@ object Scale {
     */
   def writeSnapshotCdf(spark: SparkSession, path: String, df0: DataFrame,
                        keyCol0: String,
-                       expectedVersion: Option[Long] = None): Long = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(path))
-    withTableLock(fs, path) {
-      val latest = latestSnapshot(spark, path)
-      casCheck(path, "snapshot", expectedVersion, latest.getOrElse(-1L))
-      val next = latest.map(_ + 1).getOrElse(0L)
-      // callers speak logical names (frame AND key); the diff, the feed,
-      // and the data dirs all live in physical names
-      val cmap = snapshotColMap(spark, path)
-      val df0phys = toPhysicalCols(df0, cmap)
-      val keyCol = cmap.map(_.swap).getOrElse(keyCol0, keyCol0)
-      // Write the data dir FIRST, then drive the uniqueness check and
-      // the diff off the WRITTEN bytes: the incoming frame's lineage —
-      // arbitrary caller computation — runs once instead of three times
-      // (round-19: the dup-check and the diff's new-side each re-ran
-      // the whole MERGE computation in the SQL DML path). Crash
-      // discipline is unchanged: the pointer still moves only after
-      // data + feed exist, and a require tripping here leaves an
-      // uncommitted above-pointer dir — the same garbage any crashed
-      // writer leaves, swept by vacuumSnapshots.
-      df0phys.write.mode(SaveMode.Overwrite).parquet(s"$path/v=$next")
-      val df = spark.read.parquet(s"$path/v=$next")
-      // ONE key-grouped aggregation computes the whole diff AND both
-      // key-uniqueness checks (round-19; was a dup-check action + a
-      // full-outer join + a separate rescan of a plain-committed
-      // predecessor — three shuffles and two extra driver actions).
-      // Per key: per-side row counts (each must be <= 1 — asserted
-      // in-band via assert_true, so the check costs zero extra passes
-      // and now ALWAYS covers the predecessor, not only plain-committed
-      // ones) plus each side's single row, reassembled into
-      // insert/delete/update_{pre,post}image events. The per-column
-      // conditional FIRSTs keep the aggregation buffer primitive-typed
-      // (hash aggregate, no sort); `!(p <=> n)` per column is exactly
-      // the old struct `=!=` ordering semantics (null fields compare
-      // equal).
-      val inMsg = s"writeSnapshotCdf: key column $keyCol is not unique in the incoming frame"
-      def diffEvents(prevOpt: Option[DataFrame], prevV: Long): DataFrame = {
-        val cols = df.columns.toSeq
-        val n = df.withColumn("__s", lit(1))
-        val u = prevOpt.fold(n)(p => p.withColumn("__s", lit(0)).unionByName(n))
-        val aggs =
-          count(when(col("__s") === 0, 1)).as("__np") +:
-            count(when(col("__s") === 1, 1)).as("__nn") +:
-            cols.flatMap(c => Seq(
-              first(when(col("__s") === 0, col(c)), ignoreNulls = true).as(s"__p_$c"),
-              first(when(col("__s") === 1, col(c)), ignoreNulls = true).as(s"__n_$c")))
-        val g = u.groupBy(col(keyCol).as("__k")).agg(aggs.head, aggs.tail: _*)
-        val prevMsg = s"writeSnapshotCdf: key column $keyCol is not unique in previous version v=$prevV"
-        // assert_true yields NULL when the condition holds, so the
-        // where-clause keeps every row while enforcing the check; it
-        // throws (with the side-specific message) on the first dup key
-        val checked = g.where(assert_true(col("__np") <= 1 && col("__nn") <= 1,
-          when(col("__np") > 1, lit(prevMsg)).otherwise(lit(inMsg))).isNull)
-        def side(prefix: String, tag: String) =
-          struct((cols.map(c => col(s"$prefix$c").as(c)) :+
-            lit(tag).as("_change_type")): _*)
-        val changed = cols.map(c => !(col(s"__p_$c") <=> col(s"__n_$c")))
-          .reduce(_ || _)
-        checked.select(explode(filter(array(
-            when(col("__np") === 0 && col("__nn") === 1, side("__n_", "insert")),
-            when(col("__np") === 1 && col("__nn") === 0, side("__p_", "delete")),
-            when(col("__np") === 1 && col("__nn") === 1 && changed,
-              side("__p_", "update_preimage")),
-            when(col("__np") === 1 && col("__nn") === 1 && changed,
-              side("__n_", "update_postimage"))),
-          x => x.isNotNull)).as("__e"))
-          .select((cols.map(c => col(s"__e.$c").as(c)) :+
-            col("__e._change_type").as("_change_type")): _*)
-      }
-      val changes = latest match {
-        case None =>
-          diffEvents(None, -1L)
-        case Some(v) =>
-          val prev0 = spark.read.parquet(s"$path/v=$v")
-          // ADDITIVE schema evolution (the Delta-CDF rule): the incoming
-          // frame may introduce new columns — the previous version is
-          // null-padded for them, so a row whose only difference is a
-          // new column becoming non-null records as an update, and the
-          // feed carries the WIDEST schema of its commit. Removing or
-          // retyping a column stays a loud error: a dropped column
-          // would silently erase history from every downstream diff.
-          val removed = prev0.columns.toSet -- df.columns.toSet
-          require(removed.isEmpty,
-            s"writeSnapshotCdf: incoming frame drops column(s) " +
-              s"${removed.toSeq.sorted.mkString(", ")} present in v=$v — " +
-              "only additive schema evolution is supported")
-          prev0.schema.foreach { f =>
-            require(df.schema(f.name).dataType == f.dataType,
-              s"writeSnapshotCdf: column ${f.name} retyped from " +
-                s"${f.dataType} (v=$v) to ${df.schema(f.name).dataType}")
-          }
-          val added = df.columns.filterNot(prev0.columns.contains)
-          val prev = added.foldLeft(prev0) { (d, c) =>
-            d.withColumn(c, lit(null).cast(df.schema(c).dataType))
-          }
-          diffEvents(Some(prev), v)
-      }
-      // the in-band uniqueness assert surfaces as a wrapped executor
-      // error; rethrow it under the documented driver-side contract
-      // (IllegalArgumentException naming the offending side)
-      try changes.write.mode(SaveMode.Overwrite).parquet(s"$path/_cdf/v=$next")
-      catch { case e: Throwable =>
-        val msgs = Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
-          .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
-          .mkString("\n")
-        val at = msgs.indexOf("writeSnapshotCdf: key column")
-        if (at < 0) throw e
-        throw new IllegalArgumentException(msgs.substring(at).linesIterator.next())
-      }
-      // record the PHYSICAL key name so argument-free consumers (SQL
-      // DML routing through this commit protocol) can keep the feed
-      // lineage going; last writer wins — the key is a per-commit
-      // argument, this is just its latest value
-      writeCdfKey(spark, fs, path, keyCol)
-      swapLatestPointer(spark, fs, path, next)
-      GraftTable.reindexAuto(spark, path) // inherit spec (see writeSnapshot)
-      next
+                       expectedVersion: Option[Long] = None): Long =
+    commitSnapshot(spark, path, df0, expectedVersion, Cdf(keyCol0)).get
+
+  /** The "feed" step of a [[Cdf]] commit: the diff of the just-written
+    * `v=<next>` against `latest`, written to `_cdf/v=<next>`. The
+    * uniqueness check and the diff are driven off the WRITTEN bytes: the
+    * incoming frame's lineage — arbitrary caller computation — runs once
+    * instead of three times (round-19: the dup-check and the diff's
+    * new-side each re-ran the whole MERGE computation in the SQL DML
+    * path). A require tripping here leaves an uncommitted above-pointer
+    * dir — the same garbage any crashed writer leaves.
+    */
+  private def writeChangeFeed(spark: SparkSession, path: String,
+                              latest: Option[Long], next: Long, keyCol: String): Unit = {
+    val df = spark.read.parquet(s"$path/v=$next")
+    // ONE key-grouped aggregation computes the whole diff AND both
+    // key-uniqueness checks (round-19; was a dup-check action + a
+    // full-outer join + a separate rescan of a plain-committed
+    // predecessor — three shuffles and two extra driver actions).
+    // Per key: per-side row counts (each must be <= 1 — asserted
+    // in-band via assert_true, so the check costs zero extra passes
+    // and now ALWAYS covers the predecessor, not only plain-committed
+    // ones) plus each side's single row, reassembled into
+    // insert/delete/update_{pre,post}image events. The per-column
+    // conditional FIRSTs keep the aggregation buffer primitive-typed
+    // (hash aggregate, no sort); `!(p <=> n)` per column is exactly
+    // the old struct `=!=` ordering semantics (null fields compare
+    // equal).
+    val inMsg = s"writeSnapshotCdf: key column $keyCol is not unique in the incoming frame"
+    def diffEvents(prevOpt: Option[DataFrame], prevV: Long): DataFrame = {
+      val cols = df.columns.toSeq
+      val n = df.withColumn("__s", lit(1))
+      val u = prevOpt.fold(n)(p => p.withColumn("__s", lit(0)).unionByName(n))
+      val aggs =
+        count(when(col("__s") === 0, 1)).as("__np") +:
+          count(when(col("__s") === 1, 1)).as("__nn") +:
+          cols.flatMap(c => Seq(
+            first(when(col("__s") === 0, col(c)), ignoreNulls = true).as(s"__p_$c"),
+            first(when(col("__s") === 1, col(c)), ignoreNulls = true).as(s"__n_$c")))
+      val g = u.groupBy(col(keyCol).as("__k")).agg(aggs.head, aggs.tail: _*)
+      val prevMsg = s"writeSnapshotCdf: key column $keyCol is not unique in previous version v=$prevV"
+      // assert_true yields NULL when the condition holds, so the
+      // where-clause keeps every row while enforcing the check; it
+      // throws (with the side-specific message) on the first dup key
+      val checked = g.where(assert_true(col("__np") <= 1 && col("__nn") <= 1,
+        when(col("__np") > 1, lit(prevMsg)).otherwise(lit(inMsg))).isNull)
+      def side(prefix: String, tag: String) =
+        struct((cols.map(c => col(s"$prefix$c").as(c)) :+
+          lit(tag).as("_change_type")): _*)
+      val changed = cols.map(c => !(col(s"__p_$c") <=> col(s"__n_$c")))
+        .reduce(_ || _)
+      checked.select(explode(filter(array(
+          when(col("__np") === 0 && col("__nn") === 1, side("__n_", "insert")),
+          when(col("__np") === 1 && col("__nn") === 0, side("__p_", "delete")),
+          when(col("__np") === 1 && col("__nn") === 1 && changed,
+            side("__p_", "update_preimage")),
+          when(col("__np") === 1 && col("__nn") === 1 && changed,
+            side("__n_", "update_postimage"))),
+        x => x.isNotNull)).as("__e"))
+        .select((cols.map(c => col(s"__e.$c").as(c)) :+
+          col("__e._change_type").as("_change_type")): _*)
+    }
+    val changes = latest match {
+      case None =>
+        diffEvents(None, -1L)
+      case Some(v) =>
+        val prev0 = spark.read.parquet(s"$path/v=$v")
+        // ADDITIVE schema evolution (the Delta-CDF rule): the incoming
+        // frame may introduce new columns — the previous version is
+        // null-padded for them, so a row whose only difference is a
+        // new column becoming non-null records as an update, and the
+        // feed carries the WIDEST schema of its commit. Removing or
+        // retyping a column stays a loud error: a dropped column
+        // would silently erase history from every downstream diff.
+        val removed = prev0.columns.toSet -- df.columns.toSet
+        require(removed.isEmpty,
+          s"writeSnapshotCdf: incoming frame drops column(s) " +
+            s"${removed.toSeq.sorted.mkString(", ")} present in v=$v — " +
+            "only additive schema evolution is supported")
+        prev0.schema.foreach { f =>
+          require(df.schema(f.name).dataType == f.dataType,
+            s"writeSnapshotCdf: column ${f.name} retyped from " +
+              s"${f.dataType} (v=$v) to ${df.schema(f.name).dataType}")
+        }
+        val added = df.columns.filterNot(prev0.columns.contains)
+        val prev = added.foldLeft(prev0) { (d, c) =>
+          d.withColumn(c, lit(null).cast(df.schema(c).dataType))
+        }
+        diffEvents(Some(prev), v)
+    }
+    // the in-band uniqueness assert surfaces as a wrapped executor
+    // error; rethrow it under the documented driver-side contract
+    // (IllegalArgumentException naming the offending side)
+    try changes.write.mode(SaveMode.Overwrite).parquet(s"$path/_cdf/v=$next")
+    catch { case e: Throwable =>
+      val msgs = Iterator.iterate(e.asInstanceOf[Throwable])(_.getCause)
+        .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
+        .mkString("\n")
+      val at = msgs.indexOf("writeSnapshotCdf: key column")
+      if (at < 0) throw e
+      throw new IllegalArgumentException(msgs.substring(at).linesIterator.next())
     }
   }
 
@@ -1220,21 +1280,6 @@ object Scale {
     }
   }
 
-  private def writeCdfKey(spark: SparkSession,
-                          fs: org.apache.hadoop.fs.FileSystem,
-                          path: String, physKey: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path, "_cdf_key")
-    if (!fs.exists(p) || readPointerFully(fs, p) != physKey) {
-      val tmp = new Path(path, "_cdf_key.tmp")
-      val out = fs.create(tmp, true)
-      out.write(physKey.getBytes("UTF-8")); out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        tmp.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
-
   /** The table's physical→logical column mapping (empty = identity). */
   def snapshotColMap(spark: SparkSession, path: String): Map[String, String] = {
     import org.apache.hadoop.fs.Path
@@ -1248,21 +1293,6 @@ object Scale {
           s"corrupt _colmap line '$line' at $path")
       }
     }.toMap
-  }
-
-  private def writeColMap(spark: SparkSession,
-                          fs: org.apache.hadoop.fs.FileSystem,
-                          path: String, m: Map[String, String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(path, "_colmap.tmp")
-    val out = fs.create(tmp, true)
-    out.write(m.toSeq.sorted.map { case (p, l) => s"$p\t$l" }
-      .mkString("\n").getBytes("UTF-8"))
-    out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      tmp.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new Path(path, "_colmap"),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Physical frame (as stored) → current logical names. */
@@ -1318,7 +1348,8 @@ object Scale {
       val physFrom = m.find(_._2 == from).map(_._1).getOrElse(from)
       val next = (m - physFrom) ++
         (if (physFrom == to) Nil else Seq(physFrom -> to))
-      writeColMap(spark, fs, path, next)
+      publishFile(spark, fs, new Path(path, "_colmap"),
+        next.toSeq.sorted.map { case (p, l) => s"$p\t$l" }.mkString("\n"))
     }
   }
 
@@ -1359,16 +1390,9 @@ object Scale {
     * writer's dir is excluded until the pointer moves past it).
     */
   def listSnapshots(spark: SparkSession, path: String): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val latest = latestSnapshot(spark, path)
-    if (!fs.exists(new Path(path))) Nil
-    else fs.listStatus(new Path(path)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
-      .filter(v => latest.exists(v <= _))
-      .sorted
+    numberedDirs(fs, new Path(path), "v=").map(_._1).filter(v => latest.exists(v <= _))
   }
 
   /** Drop all but the newest `keepLast` snapshots. Returns the versions
@@ -1377,7 +1401,6 @@ object Scale {
     */
   def vacuumSnapshots(spark: SparkSession, path: String,
                       keepLast: Int): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
     require(keepLast >= 1, "keepLast must be >= 1")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     withTableLock(fs, path) {
@@ -1400,14 +1423,10 @@ object Scale {
       // Readers anchored inside a swept range fail loudly naming the
       // checkpoint boundary (readChangesBetween's contract).
       val covered = listFeedCheckpoints(fs, path)
+      val feeds = numberedDirs(fs, new Path(path, "_cdf"), "v=")
       if (covered.nonEmpty) {
-        val cdfRoot0 = new Path(s"$path/_cdf")
-        if (fs.exists(cdfRoot0))
-          fs.listStatus(cdfRoot0).toSeq.filter(_.isDirectory)
-            .map(_.getPath.getName)
-            .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
-            .filter(v => covered.exists { case (f, t) => f < v && v <= t })
-            .foreach(v => fs.delete(new Path(s"$path/_cdf/v=$v"), true))
+        feeds.filter { case (v, _) => covered.exists { case (f, t) => f < v && v <= t } }
+          .foreach(e => fs.delete(e._2, true))
         // a checkpoint whose range another checkpoint strictly extends is
         // itself superseded (chained squashes): keep only maximal ranges
         covered.foreach { case (f, t) =>
@@ -1423,11 +1442,7 @@ object Scale {
       // garbage" would delete the whole table's history over one lost
       // 64-byte file.
       val latest = latestSnapshot(spark, path)
-      val onDisk =
-        if (!fs.exists(new Path(path))) Nil
-        else fs.listStatus(new Path(path)).toSeq.filter(_.isDirectory)
-          .map(_.getPath.getName)
-          .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
+      val onDisk = numberedDirs(fs, new Path(path), "v=").map(_._1)
       latest match {
         case Some(l) =>
           onDisk.filter(_ > l).foreach { v =>
@@ -1443,13 +1458,7 @@ object Scale {
           // also orphan feeds ABOVE any existing data dir (a CDF writer
           // that crashed before even finishing its data dir leaves only
           // the feed behind)
-          val cdfRoot = new Path(s"$path/_cdf")
-          if (fs.exists(cdfRoot))
-            fs.listStatus(cdfRoot).toSeq.filter(_.isDirectory)
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
-              .filter(_ > l)
-              .foreach(v => fs.delete(new Path(s"$path/_cdf/v=$v"), true))
+          feeds.filter(_._1 > l).foreach(e => fs.delete(e._2, true))
         case None => require(onDisk.isEmpty,
           s"snapshot pointer missing at $path but ${onDisk.size} snapshot " +
             "dirs exist — refusing to vacuum corrupt table metadata")
@@ -1519,19 +1528,6 @@ object Scale {
     }
   }
 
-  private def writeMorPointer(spark: SparkSession,
-                              fs: org.apache.hadoop.fs.FileSystem,
-                              path: String, v: Long, hwm: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(path, "_mor.tmp")
-    val out = fs.create(tmp, true)
-    out.write(s"$v $hwm".getBytes("UTF-8")); out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      tmp.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new Path(path, "_mor"),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
   /** Merge-on-read CAS (see [[CommitConflictException]]): compare the
     * writer's observed (base version, NEXT COMMIT NUMBER) against the
     * live table under the lock. The second element is
@@ -1566,17 +1562,49 @@ object Scale {
     * readers. Tables written before appends existed have only `d=`
     * entries — the numbering is unchanged for them.
     */
-  private def nextCommitNum(fs: org.apache.hadoop.fs.FileSystem,
-                            path: String): Long = {
-    import org.apache.hadoop.fs.Path
-    def maxIn(dir: String, prefix: String): Long = {
-      val p = new Path(path, dir)
-      if (!fs.exists(p)) -1L
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith(prefix) => n.stripPrefix(prefix).toLong }
-        .foldLeft(-1L)(math.max)
-    }
-    math.max(maxIn("_deletes", "d="), maxIn("_appends", "a=")) + 1
+  private def nextCommitNum(fs: FileSystem, path: String): Long =
+    (numberedDirs(fs, new Path(path, "_deletes"), "d=") ++
+      numberedDirs(fs, new Path(path, "_appends"), "a=")).map(_._1).foldLeft(-1L)(math.max) + 1
+
+  /** A merge-on-read table's `<dir>/<prefix><c>` commit dirs (appends
+    * `_appends/a=<c>` or equality deletes `_deletes/d=<c>`) with
+    * fence <= c <= upto, as (commit, path), ascending.
+    */
+  private[operators] def morDirs(fs: FileSystem, path: String, dir: String, prefix: String,
+                                 fence: Long, upto: Long = Long.MaxValue): Seq[(Long, String)] =
+    numberedDirs(fs, new Path(path, dir), prefix)
+      .collect { case (c, p) if c >= fence && c <= upto => (c, p.toString) }
+
+  /** The base commit behind [[writeMorBase]] and [[compactDeletes]]:
+    * "data" writes `base_v=<next>` (Overwrite: a dir at `next` is a
+    * crashed writer's leftovers — the pointer never moved past it),
+    * "publish" atomically moves the `_mor` pointer to (next, fence), and
+    * the new generation inherits the previous one's skipping spec (no-op
+    * on never-indexed tables).
+    */
+  private def commitMorBase(spark: SparkSession, fs: FileSystem, path: String,
+                            next: Long, fence: Long, data: DataFrame): Unit = {
+    step(path, "data")
+    data.write.mode(SaveMode.Overwrite).parquet(s"$path/base_v=$next")
+    step(path, "publish")
+    publishFile(spark, fs, new Path(path, "_mor"), s"$next $fence")
+    GraftTable.reindexAuto(spark, path)
+  }
+
+  /** The row commit behind [[appendMorRows]] and [[appendDeletes]]:
+    * "data" writes `<dir>/.<p>_tmp`, "publish" renames it to
+    * `<dir>/<p>=<c>` — the dir appears atomically, so a lock-free reader
+    * never scans a half-written one. Returns `c`.
+    */
+  private def commitMorDir(fs: FileSystem, path: String, dir: String, p: String,
+                           c: Long, data: DataFrame): Long = {
+    val tmp = new Path(path, s"$dir/.${p}_tmp")
+    fs.delete(tmp, true)
+    step(path, "data")
+    data.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    step(path, "publish")
+    renameOrFail(fs, tmp, new Path(s"$path/$dir/$p=$c"))
+    c
   }
 
   /** Initialize (or REPLACE) the base of a merge-on-read table as a new
@@ -1600,13 +1628,7 @@ object Scale {
       // as the snapshot commits.
       morCasCheck(spark, fs, path, expectedState)
       val next = morPointer(spark, path).map(_._1 + 1).getOrElse(0L)
-      // Overwrite: a dir at `next` is a crashed writer's leftovers (the
-      // pointer never moved past it) — same rationale as writeSnapshot.
-      df.write.mode(SaveMode.Overwrite).parquet(s"$path/base_v=$next")
-      writeMorPointer(spark, fs, path, next, nextCommitNum(fs, path))
-      // a superseding base generation inherits the previous one's
-      // skipping spec (no-op on never-indexed tables)
-      GraftTable.reindexAuto(spark, path)
+      commitMorBase(spark, fs, path, next, nextCommitNum(fs, path), df)
     }
   }
 
@@ -1639,17 +1661,13 @@ object Scale {
       val next = nextCommitNum(fs, path)
       // type check against the newest EXISTING delete file (commit
       // numbers are shared with appends, so next-1 may be an append dir)
-      deleteDirs(fs, path, 0L).lastOption.foreach { case (_, prev) =>
+      morDirs(fs, path, "_deletes", "d=", 0L).lastOption.foreach { case (_, prev) =>
         val prevType = spark.read.parquet(prev).schema.head.dataType
         require(keys.schema.head.dataType == prevType,
           s"equality-delete key type ${keys.schema.head.dataType} does not " +
             s"match the table's existing delete files ($prevType)")
       }
-      val tmp = new Path(path, "_deletes/.d_tmp")
-      fs.delete(tmp, true)
-      keys.toDF("key").write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      renameOrFail(fs, tmp, new Path(s"$path/_deletes/d=$next"))
-      next
+      commitMorDir(fs, path, "_deletes", "d", next, keys.toDF("key"))
     }
   }
 
@@ -1680,41 +1698,12 @@ object Scale {
         s"appendMorRows: schema mismatch — base has " +
           s"[${baseSchema.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ")}], " +
           s"append has [${df.schema.map(f => s"${f.name}: ${f.dataType.simpleString}").mkString(", ")}]")
-      val next = nextCommitNum(fs, path)
-      val tmp = new Path(path, "_appends/.a_tmp")
-      fs.delete(tmp, true)
-      df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      renameOrFail(fs, tmp, new Path(s"$path/_appends/a=$next"))
+      val next = commitMorDir(fs, path, "_appends", "a", nextCommitNum(fs, path), df)
       // the generation's file set grew — rebuild the skipping manifests
       // so indexed reads stay valid (absent index: no-op)
       GraftTable.reindexAuto(spark, path)
       next
     }
-  }
-
-  /** Live append dirs (a >= fence), as (commit, path). */
-  private def appendDirs(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                         fence: Long, upto: Long = Long.MaxValue): Seq[(Long, String)] = {
-    import org.apache.hadoop.fs.Path
-    val apps = new Path(path, "_appends")
-    if (!fs.exists(apps)) Nil
-    else fs.listStatus(apps).toSeq.map(_.getPath)
-      .collect { case p if p.getName.startsWith("a=") &&
-          { val c = p.getName.stripPrefix("a=").toLong; c >= fence && c <= upto } =>
-        (p.getName.stripPrefix("a=").toLong, p.toString) }
-      .sortBy(_._1)
-  }
-
-  private def deleteDirs(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                         fence: Long, upto: Long = Long.MaxValue): Seq[(Long, String)] = {
-    import org.apache.hadoop.fs.Path
-    val dels = new Path(path, "_deletes")
-    if (!fs.exists(dels)) Nil
-    else fs.listStatus(dels).toSeq.map(_.getPath)
-      .collect { case p if p.getName.startsWith("d=") &&
-          { val c = p.getName.stripPrefix("d=").toLong; c >= fence && c <= upto } =>
-        (p.getName.stripPrefix("d=").toLong, p.toString) }
-      .sortBy(_._1)
   }
 
   /** Commits are ONE dense global sequence from the fence up (every
@@ -1775,8 +1764,8 @@ object Scale {
     // explicit dir lists, not a `d=*` glob: the glob path trips Spark's
     // streaming-sink metadata probe into logging a spurious
     // FileNotFoundException stack per read
-    val appDs0 = appendDirs(fs, path, fence, upto)
-    val delDs0 = deleteDirs(fs, path, fence, upto)
+    val appDs0 = morDirs(fs, path, "_appends", "a=", fence, upto)
+    val delDs0 = morDirs(fs, path, "_deletes", "d=", fence, upto)
     val h = consistentHorizon(fence, appDs0.map(_._1) ++ delDs0.map(_._1))
     val appDs = appDs0.filter(_._1 <= h)
     val delDs = delDs0.filter(_._1 <= h)
@@ -1875,11 +1864,11 @@ object Scale {
     val (v, fence) = morPointer(spark, path).getOrElse(throw new IllegalStateException(
       s"no committed merge-on-read base at $path"))
     val base = spark.read.parquet(s"$path/base_v=$v")
-    val rows = appendDirs(fs, path, fence, toC).foldLeft(
+    val rows = morDirs(fs, path, "_appends", "a=", fence, toC).foldLeft(
       base.withColumn("__seq", lit(fence - 1))) { case (acc, (c, p)) =>
       acc.unionByName(spark.read.parquet(p).withColumn("__seq", lit(c)))
     }
-    val delDs = deleteDirs(fs, path, fence, toC)
+    val delDs = morDirs(fs, path, "_deletes", "d=", fence, toC)
     if (delDs.isEmpty) {
       if (keepAll) rows.withColumn("__kill", lit(null).cast("long"))
       else rows.limit(0).withColumn("__kill", lit(null).cast("long"))
@@ -1918,7 +1907,7 @@ object Scale {
       s"commit $toC not committed yet")
     val base = spark.read.parquet(s"$path/base_v=$v")
     val dataCols = base.columns.toIndexedSeq
-    val delDs = deleteDirs(fs, path, fence, toC)
+    val delDs = morDirs(fs, path, "_deletes", "d=", fence, toC)
     val deletes =
       if (delDs.isEmpty) base.limit(0)
         .withColumn("_change_type", lit("delete"))
@@ -1930,7 +1919,7 @@ object Scale {
           .select((dataCols.map(col) :+
             lit("delete").as("_change_type") :+
             col("__kill").as("_commit_version")): _*)
-    val inserts = appendDirs(fs, path, fence, toC)
+    val inserts = morDirs(fs, path, "_appends", "a=", fence, toC)
       .filter { case (c, _) => c > fromC }
       .map { case (c, p) =>
         spark.read.parquet(p)
@@ -1968,12 +1957,8 @@ object Scale {
       val (v, hwm) = morPointer(spark, path).getOrElse(throw new IllegalStateException(
         s"no committed merge-on-read base at $path"))
       val maxD = nextCommitNum(fs, path) - 1
-      if (maxD >= hwm) {
-        readMergeOnRead(spark, path, keyCol)
-          .write.mode(SaveMode.Overwrite).parquet(s"$path/base_v=${v + 1}")
-        writeMorPointer(spark, fs, path, v + 1, maxD + 1)
-        GraftTable.reindexAuto(spark, path) // inherit spec (see writeSnapshot)
-      }
+      if (maxD >= hwm)
+        commitMorBase(spark, fs, path, v + 1, maxD + 1, readMergeOnRead(spark, path, keyCol))
     }
   }
 
@@ -1990,10 +1975,7 @@ object Scale {
     withTableLock(fs, path) {
       val (v, hwm) = morPointer(spark, path).getOrElse(throw new IllegalStateException(
         s"no committed merge-on-read base at $path"))
-      val baseVictims = fs.listStatus(new Path(path)).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("base_v=") => n.stripPrefix("base_v=").toLong }
-        .filter(_ != v).sorted
+      val baseVictims = numberedDirs(fs, new Path(path), "base_v=").map(_._1).filter(_ != v)
       // superseded generations take their skipping manifests with them
       // (auto re-index writes `_index/base_v=<n>` per generation on
       // indexed tables) — same no-orphaned-metadata rule as
@@ -2002,22 +1984,13 @@ object Scale {
         fs.delete(new Path(s"$path/base_v=$b"), true)
         fs.delete(new Path(s"$path/_index/base_v=$b"), true)
       }
-      val dels = new Path(path, "_deletes")
-      val delVictims =
-        if (!fs.exists(dels)) Nil
-        else fs.listStatus(dels).toSeq.map(_.getPath.getName)
-          .collect { case n if n.startsWith("d=") => n.stripPrefix("d=").toLong }
-          .filter(_ < hwm).sorted
-      delVictims.foreach(k => fs.delete(new Path(s"$path/_deletes/d=$k"), true))
+      val delVictims = numberedDirs(fs, new Path(path, "_deletes"), "d=").filter(_._1 < hwm)
+      delVictims.foreach(d => fs.delete(d._2, true))
       // appends below the fence were folded into the pointer's base by
       // compactDeletes — same superseded-dir rule as folded delete files
-      val apps = new Path(path, "_appends")
-      if (fs.exists(apps))
-        fs.listStatus(apps).toSeq.map(_.getPath.getName)
-          .collect { case n if n.startsWith("a=") => n.stripPrefix("a=").toLong }
-          .filter(_ < hwm)
-          .foreach(k => fs.delete(new Path(s"$path/_appends/a=$k"), true))
-      (baseVictims, delVictims)
+      numberedDirs(fs, new Path(path, "_appends"), "a=").filter(_._1 < hwm)
+        .foreach(a => fs.delete(a._2, true))
+      (baseVictims, delVictims.map(_._1))
     }
   }
 
@@ -2067,12 +2040,7 @@ object Scale {
       }
       val touched = deltaAgg.select(col(partCol)).distinct().collect().map(_.get(0))
       require(touched.nonEmpty, "refreshAggregate: delta is empty")
-      val (nullTouched, nonNull) = touched.toIndexedSeq.partition(_ == null)
-      val touchedPred =
-        if (nullTouched.isEmpty) col(partCol).isin(nonNull: _*)
-        else if (nonNull.isEmpty) col(partCol).isNull
-        else col(partCol).isin(nonNull: _*) || col(partCol).isNull
-      val base = spark.read.parquet(path).filter(touchedPred)
+      val base = spark.read.parquet(path).filter(touchedPred(col(partCol), touched.toIndexedSeq))
       // re-sum partials: base cnt/sums are already aggregates, so the
       // combined count is sum(cnt), not count(*)
       val merged = partials(base.unionByName(deltaAgg), sum(col("cnt")))
@@ -2081,15 +2049,7 @@ object Scale {
       merged.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmp.toString)
       val written = fs.listStatus(tmp)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      written.foreach { s =>
-        val to = new Path(src, s.getPath.getName)
-        val bak = new Path(to.toString + "__agg_bak")
-        fs.delete(bak, true)
-        val existed = fs.exists(to)
-        if (existed) renameOrFail(fs, to, bak)
-        renameOrFail(fs, s.getPath, to)
-        if (existed) { fs.delete(bak, true); () }
-      }
+      written.foreach(s => swapDir(fs, s.getPath, new Path(src, s.getPath.getName), "__agg_bak"))
       fs.delete(tmp, true); ()
     }
   }

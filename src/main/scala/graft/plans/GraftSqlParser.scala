@@ -32,8 +32,8 @@ import graft.operators.{GraftTable, Scale}
   * }}}
   *
   * Each statement compiles to a [[LeafRunnableCommand]] calling the
-  * SAME library entry point programmatic callers use — identical
-  * locking (`withTableLock`), identical crash-safety, identical
+  * SAME library entry point programmatic callers use — the same table
+  * lock, the same commit seam (so the same crash-safety), identical
   * semantics; the SQL form adds nothing but the spelling. Commands
   * return status ROWS (removed versions, the checkpoint tag, the new
   * MoR state, the rebuilt index spec) so maintenance is scriptable

@@ -1062,9 +1062,10 @@ object IoQueries {
         val (read, total) = graft.operators.GraftTable.scanFiles(df)
         val (v, _) = graft.operators.Scale.morPointer(s, path)
           .getOrElse(sys.error(s"h14: no MoR pointer at $path"))
-        val zones = graft.operators.Scale
-          .zoneMap(s, s"$path/base_v=$v", "n_chars")
-          .select(col("min_v").cast("long"), col("max_v").cast("long"))
+        // the zones unifiedDocs' buildIndex persisted for this base (the
+        // manifest GraftFileIndex prunes with), not a fresh base scan
+        val zones = s.read.parquet(s"$path/_index/base_v=$v/zone_long_n_chars")
+          .select(col("min_v"), col("max_v"))
           .collect().filter(z => !z.isNullAt(0) && !z.isNullAt(1))
         val skippable = zones.count(z =>
           z.getLong(1) < 450L || z.getLong(0) > 10000L)
